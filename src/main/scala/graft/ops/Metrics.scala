@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Tables.tsMillis
+import graft.functions.ConstantRef.constant_ref
 
 /** Latency + per-batch metric computation — the reference's core semantics
   * (spark_job/spark_stream_metrics.py:49-68) re-expressed as a SINGLE
@@ -54,10 +55,17 @@ object Metrics {
     * (`unix_timestamp(current_timestamp()) * 1000`); a fixed `nowMs` makes
     * the metric deterministic for oracle comparison (SURVEY §7.4.1).
     */
-  def withLatency(df: DataFrame, tsCol: Column, nowMs: Option[Long]): DataFrame = {
-    val now = nowMs.map(lit(_)).getOrElse(unix_timestamp(current_timestamp()) * 1000L)
-    df.withColumn("latency_ms", (now - tsMillis(tsCol)).cast("long"))
-  }
+  def withLatency(df: DataFrame, tsCol: Column, nowMs: Option[Long]): DataFrame =
+    df.withColumn("latency_ms", (now(nowMs) - tsMillis(tsCol)).cast("long"))
+
+  /** The latency clock in epoch ms: a fixed `nowMs` as a plain literal, or
+    * the reference's `unix_timestamp(current_timestamp()) * 1000`. The
+    * wall-clock value is wrapped in [[ConstantRef]], so a streaming query's
+    * generated code stays the same from one batch timestamp to the next and
+    * compiles once.
+    */
+  def now(nowMs: Option[Long]): Column =
+    nowMs.map(lit(_)).getOrElse(constant_ref(unix_timestamp(current_timestamp()) * 1000L))
 
   /** The five metric aggregates of a batch, INTEGER-exact flavor for oracle
     * hash-matching. Latency is integral ms at ~1e9 magnitude, where a

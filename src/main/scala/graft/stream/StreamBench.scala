@@ -1,7 +1,6 @@
 package graft.stream
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.gen.EventGen
 
@@ -24,14 +23,7 @@ object StreamBench {
     val source = args.lift(3).getOrElse("rate")
     val triggerSec = 5
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(cores, "graft-streambench")
 
     val outDir = Files.createTempDirectory("streambench_out").toString
     val ckpt = Files.createTempDirectory("streambench_ckpt").toString

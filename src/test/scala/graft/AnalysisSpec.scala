@@ -72,6 +72,26 @@ class AnalysisSpec extends SparkSpec {
     assert(got.schema.fieldNames.toSeq == graft.model.BatchMetrics.schema.fieldNames.toSeq)
   }
 
+  test("readMetricsCsv reads the idempotent sink's batch_id=N files") {
+    def event(id: String, ts: Long) =
+      s"""{"event_id":"$id","created_ts":$ts,"user_id":1,"event_type":"click","value":1.5,"payload":"x"}"""
+    val outDir = graft.TempStores.newStorePath("metrics_idem_read").toString
+    val t0 = System.currentTimeMillis() / 1000L
+    Seq(4L -> Seq(event("a", 40000L), event("b", 60000L)),
+      9L -> Seq(event("c", 70000L), event("d", 80000L), event("e", 90000L))).foreach {
+      case (id, events) =>
+        val batch = graft.stream.MetricsJob.withLatency(
+          graft.stream.MetricsJob.parse(events.toDF("value")), Some(100000L))
+        graft.stream.MetricsJob.writeBatchIdempotent(spark, outDir)(batch, id)
+    }
+    val t1 = System.currentTimeMillis() / 1000L
+    val got = Analysis.readMetricsCsv(spark, outDir)
+      .select($"batch_id", $"epoch_sec", $"batch_events", $"mean_latency_ms")
+      .as[(Long, Long, Long, Double)].collect().sortBy(_._1)
+    assert(got.map(r => (r._1, r._3, r._4)).toSeq == Seq((4L, 2L, 50000.0), (9L, 3L, 20000.0)))
+    assert(got.forall(r => r._2 >= t0 && r._2 <= t1), s"epoch_sec outside [$t0, $t1]: ${got.mkString}")
+  }
+
   test("S6 plot sinks: exp1/exp2 SVG figures carry the summary's data points") {
     // Two labeled runs -> summary -> figures. The SVG must be
     // self-contained markup with one marker per summary row (exp1 line

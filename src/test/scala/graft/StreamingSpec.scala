@@ -382,6 +382,94 @@ class StreamingSpec extends SparkSpec {
     assert(rows.columns.contains("batch_id")) // partition-discovered column
   }
 
+  test("both metrics sinks write the files the DataFrameWriter spelling wrote, null aggregates as NaN") {
+    val batches = Seq(
+      3L -> Seq(jsonEvent("a", 40000L), jsonEvent("b", 60000L)),
+      4L -> Seq("{not valid json", "{nor this")) // all malformed: aggregates are null
+    val Seq(append, idem, appendTwin, idemTwin) =
+      Seq("sink_append", "sink_idem", "twin_append", "twin_idem")
+        .map(graft.TempStores.newStorePath(_).toString)
+    val t0 = System.currentTimeMillis() / 1000L
+    batches.foreach { case (id, events) =>
+      val df = MetricsJob.withLatency(MetricsJob.parse(events.toDF("value")), Some(100000L))
+      MetricsJob.writeBatch(spark, append)(df, id)
+      MetricsJob.writeBatchIdempotent(spark, idem)(df, id)
+      // the Spark CSV writer's spelling of the same row
+      val r = MetricsJob.batchMetricsRow(df).get
+      def agg(i: Int) = if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
+      val twin = Seq((id, t0, r.getLong(0), agg(1), agg(2), agg(3), agg(4)))
+        .toDF(graft.model.BatchMetrics.schema.fieldNames.toSeq: _*).coalesce(1)
+      twin.write.mode("append").option("header", "true").csv(appendTwin)
+      twin.write.mode("overwrite").option("header", "true").csv(s"$idemTwin/batch_id=$id")
+    }
+    val t1 = System.currentTimeMillis() / 1000L
+    // epoch_sec is the write time, so it is compared against the window
+    def rows(df: org.apache.spark.sql.DataFrame) = {
+      val epochs = df.select($"epoch_sec".cast("long")).as[Long].collect()
+      assert(epochs.forall(e => e >= t0 && e <= t1), s"epoch_sec outside [$t0, $t1]")
+      df.drop("epoch_sec").collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString(",")).toSeq
+    }
+    def csv(dir: String) = spark.read.option("header", "true").csv(dir)
+    for ((dir, twinDir) <- Seq(append -> appendTwin, idem -> idemTwin)) {
+      assert(csv(dir).columns.toSeq == csv(twinDir).columns.toSeq)
+      val got = rows(csv(dir))
+      assert(got.size == 2 && got == rows(csv(twinDir)), got)
+      assert(got.exists(_.contains("NaN")), "null aggregates are written as NaN")
+      val analysed = rows(graft.analysis.Analysis.readMetricsCsv(spark, dir))
+      assert(analysed == rows(graft.analysis.Analysis.readMetricsCsv(spark, twinDir)))
+      // the analysis scan drops a NaN p95, like the reference's dropna
+      assert(analysed.map(_.take(2)) == Seq(Seq("3", "2")))
+    }
+  }
+
+  test("wall-clock withLatency generates the same code at every batch timestamp") {
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    // a Range source keeps the latency projection in generated code
+    val events = spark.range(3).select(($"id" * 1000L).as("created_ts"))
+    val literal = (unix_timestamp(current_timestamp()) * 1000L - $"created_ts").cast("long")
+    def code(df: org.apache.spark.sql.DataFrame) =
+      codegenStringSeq(df.queryExecution.executedPlan).map(_._2)
+    def run() = {
+      val lat = MetricsJob.withLatency(events)
+      val both = lat.withColumn("literal", literal)
+        .select($"latency_ms", $"literal").as[(Long, Long)].collect()
+      (code(lat), code(events.withColumn("latency_ms", literal)), both)
+    }
+    val (code1, literalCode1, rows1) = run()
+    Thread.sleep(1100L) // unix_timestamp has second granularity
+    val (code2, literalCode2, rows2) = run()
+    for (rows <- Seq(rows1, rows2)) {
+      assert(rows.length == 3)
+      rows.foreach { case (got, want) => assert(got == want) }
+    }
+    assert(rows2.head._1 - rows1.head._1 >= 1000L, "two different timestamps")
+    assert(code1.nonEmpty && code1 == code2)
+    // the literal spelling inlines the timestamp, so its source differs
+    assert(literalCode1 != literalCode2)
+
+    // The micro-batch path re-plans with each batch's timestamp: after the
+    // first batch, later batches compile no generated class.
+    val input = MemoryStream[String](spark)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val q = MetricsJob.withLatency(MetricsJob.parse(input.toDF())).writeStream
+      .foreachBatch((df: org.apache.spark.sql.DataFrame, _: Long) =>
+        df.select($"latency_ms").as[Long].collect().foreach(seen.add))
+      .start()
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compiled = try {
+      (0 until 3).map { i =>
+        if (i > 0) Thread.sleep(1100L) // the next batch timestamp second
+        val before = compiles
+        input.addData(jsonEvent(s"e$i", System.currentTimeMillis()))
+        q.processAllAvailable()
+        compiles - before
+      }
+    } finally q.stop()
+    assert(compiled.tail == Seq(0L, 0L), s"classes compiled per batch: $compiled")
+    import scala.jdk.CollectionConverters._
+    assert(seen.size == 3 && seen.asScala.forall(l => l > -1000L && l < 60000L), seen)
+  }
+
   test("checkpoint restart does not re-emit committed batches") {
     val input = MemoryStream[String](spark)
     val outDir = graft.TempStores.newStorePath("metrics_out3").toString
@@ -418,10 +506,16 @@ class StreamingSpec extends SparkSpec {
       finally q.stop()
     }
     run(Seq(jsonEvent("a", 40000L)))
+    // a write interrupted mid-file leaves its hidden temp file behind
+    val stray = java.nio.file.Paths.get(outDir, "batch_id=0", ".part-00000.csv.tmp")
+    Files.writeString(stray, "batch_id,epoch_sec,batch_events,mean_lat")
+    assert(spark.read.option("header", "true").csv(outDir).count() == 1L)
+    assert(graft.analysis.Analysis.readMetricsCsv(spark, outDir).count() == 1L)
     // crash-window replay: the last batch re-runs against the same outDir
     val replay = MetricsJob.withLatency(MetricsJob.parse(
       Seq(jsonEvent("a", 40000L)).toDF("value")), Some(100000L))
     MetricsJob.writeBatchIdempotent(spark, outDir)(replay, 0L)
+    assert(!Files.exists(stray), "the replay's own write replaces the stray temp file")
     run(Seq(jsonEvent("b", 60000L))) // restart from the same checkpoint
     val rows = spark.read.option("header", "true").csv(outDir)
     val n = rows.count()
@@ -429,6 +523,9 @@ class StreamingSpec extends SparkSpec {
     assert(n == distinctBatches,
       s"duplicate batch rows: $n rows over $distinctBatches batch ids")
     assert(n == 2L, s"expected one row per processed batch, got $n")
+    val read = graft.analysis.Analysis.readMetricsCsv(spark, outDir)
+      .select($"batch_id", $"batch_events").as[(Long, Long)].collect().sorted
+    assert(read.toSeq == Seq((0L, 1L), (1L, 1L)))
   }
 
   test("PQ encode runs as a stateless streaming projection (vector-stream serving)") {
