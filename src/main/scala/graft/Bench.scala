@@ -22,14 +22,8 @@ object Bench {
     // (the ScaleProbe lesson: fixed partitions make per-partition hash
     // builds grow linearly with the corpus until they overwhelm the heap).
     val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt)
+    spark.conf.set("spark.sql.shuffle.partitions", shuffleParts)
 
     SparkEntry.queries.foreach { case (_, fn) =>
       try fn(spark, "/root/testdata/sf0.001").count()

@@ -360,8 +360,9 @@ object Dedup {
     // at most ~bound rows before falling back to the distributed
     // fixpoint — which, being the above-bound path by construction,
     // joins node-sized label state through KEYED EXCHANGES, never a
-    // BroadcastExchange (the r13 verdict's billion-node OOM note;
-    // PlanAuditSpec asserts it).
+    // forced BroadcastExchange (the r13 verdict's billion-node OOM note;
+    // PlanAuditSpec "connectedComponents above its local bound: no
+    // forced broadcast, union-find labels" asserts it).
     val spark = edges.sparkSession
     val bound = spark.conf.getOption(CcLocalEdgeBoundKey)
       .map(_.toLong).getOrElse(CcLocalEdgeBoundDefault)

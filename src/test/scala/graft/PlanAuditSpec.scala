@@ -535,6 +535,47 @@ class PlanAuditSpec extends SparkSpec {
         offenders.mkString("\n"))
   }
 
+  test("connectedComponents above its local bound: no forced broadcast, union-find labels") {
+    // The distributed fixpoint is the above-bound path: node-sized label
+    // state joins through keyed exchanges, never a broadcast hint
+    // (Dedup.connectedComponents). On a graph that large, no side fits the
+    // planner's size-based broadcast threshold; this small graph stands in
+    // for it with that threshold off (-1), so any BroadcastExchange left
+    // would be one the code forces. Every query the call runs, and the
+    // read of its result, is audited.
+    import spark.implicits._
+    import graft.ext.Dedup
+    val rng = new scala.util.Random(7)
+    val edges = (Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L), (10L, 12L),
+      (11L, 12L), (20L, 21L)) ++
+      Seq.fill(40)((100L + rng.nextInt(60), 100L + rng.nextInt(60)))).toDF("id_a", "id_b")
+    val local = Dedup.connectedComponents(edges, "id_a", "id_b")
+      .as[(Long, Long)].collect().toMap
+    val plans = scala.collection.mutable.ArrayBuffer[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan.toString }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val confs = Seq(Dedup.CcLocalEdgeBoundKey -> "0", "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val sc = spark.sparkContext
+    org.apache.spark.graftbridge.CoreBridge.waitListeners(sc)
+    spark.listenerManager.register(listener)
+    val distributed = try {
+      Dedup.connectedComponents(edges, "id_a", "id_b").as[(Long, Long)].collect().toMap
+    } finally {
+      org.apache.spark.graftbridge.CoreBridge.waitListeners(sc)
+      spark.listenerManager.unregister(listener)
+      saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    assert(plans.nonEmpty)
+    val broadcast = plans.filter(_.contains("BroadcastExchange"))
+    assert(broadcast.isEmpty, broadcast.mkString("\n---\n"))
+    assert(distributed == local)
+  }
+
   test("sessionize batch: one shuffle keyed by user (agg reuses window partitioning)") {
     import org.apache.spark.sql.functions._
     val df = graft.stream.Sessionize.batch(
