@@ -50,23 +50,13 @@ object Dedup {
   /** Combined shingle hashes from a pre-staged per-token hash array;
     * mirrors shingleSet's <n fallback (documents shorter than n words use
     * their token hashes directly). Routed through the native one-pass
-    * [[graft.functions.ShingleHashes]] expression — bit-identical to
-    * [[shingleHashesReference]] (proved in VectorExpressionsSpec) without
-    * its two interpreted HOFs and per-row index-sequence allocation.
+    * [[graft.functions.ShingleHashes]] expression — bit-identical to the
+    * declarative transform/fold spelling the DuckDB oracles mirror
+    * (VectorExpressionsSpec proves it) without its two interpreted HOFs
+    * and per-row index-sequence allocation.
     */
   def shingleHashes(tokHashes: Column, n: Int = ShingleN): Column =
     graft.functions.HashExpressions.shingle_hashes(tokHashes, n, ShingleA, MinhashP)
-
-  /** Declarative reference form of [[shingleHashes]] — the executable spec
-    * the native expression is proved against, and the shape the DuckDB
-    * oracles mirror.
-    */
-  def shingleHashesReference(tokHashes: Column, n: Int = ShingleN): Column = {
-    val combined = transform(sequence(lit(1), size(tokHashes) - (n - 1)),
-      i => (1 until n).foldLeft(element_at(tokHashes, i): Column)((acc, o) =>
-        pmod(acc * ShingleA + element_at(tokHashes, i + o), lit(MinhashP))))
-    when(size(tokHashes) < n, tokHashes).otherwise(combined)
-  }
 
   /** doc frame -> (id, sig_0..sig_{k-1}) — the per-document sketch over
     * word-ShingleN shingles (unigram minhash is degenerate under a small
@@ -95,25 +85,16 @@ object Dedup {
     *
     * All k minima come from ONE native traversal
     * ([[graft.functions.MinhashSigs]]); the k projected columns share the
-    * array via codegen subexpression elimination. The declarative twin
-    * ([[signaturesFromHashesReference]]) evaluates 2k interpreted HOF
-    * passes per document.
+    * array via codegen subexpression elimination. The declarative
+    * spelling the DuckDB oracles mirror (proved equal in
+    * VectorExpressionsSpec) evaluates 2k interpreted HOF passes per
+    * document.
     */
   def signaturesFromHashes(hashes: Column, k: Int = MinhashK): Seq[Column] = {
     val sigs = graft.functions.HashExpressions.minhash_sigs(
       hashes, k, 100003L, 7919L, 7L, 11117L, MinhashP)
     (0 until k).map(i => element_at(sigs, i + 1).as(s"sig_$i"))
   }
-
-  /** Declarative reference form of [[signaturesFromHashes]] — the
-    * executable spec the native expression is proved against, and the
-    * shape the DuckDB oracles mirror.
-    */
-  def signaturesFromHashesReference(hashes: Column, k: Int = MinhashK): Seq[Column] =
-    (0 until k).map { i =>
-      array_min(transform(hashes,
-        h => pmod(lit(minhashA(i)) * h + lit(minhashB(i)), lit(MinhashP)))).as(s"sig_$i")
-    }
 
   /** LSH banding: group the k signature components into `bands` bands and
     * emit (band_index, band_key, id). Near-duplicates agree on at least one
@@ -181,25 +162,13 @@ object Dedup {
   def simhash32(toks: Column): Column = simhash32FromHashes(hashAll(toks))
 
   /** SimHash over a PRE-STAGED hash-array column: the native one-pass
-    * codegen expression (graft.functions.Simhash32). Bit-identical to
-    * [[simhash32Reference]] (proved in VectorExpressionsSpec) without its
-    * 32 interpreted aggregate passes over the array.
+    * codegen expression (graft.functions.Simhash32). Bit-identical to the
+    * declarative spelling the DuckDB oracle mirrors, one `aggregate` HOF
+    * per bit (VectorExpressionsSpec proves it), without its 32
+    * interpreted passes over the array.
     */
   def simhash32FromHashes(hashes: Column): Column =
     graft.functions.HashExpressions.simhash32(hashes)
-
-  /** Declarative reference form of the sketch — 32 `aggregate` HOFs, one
-    * per bit, each a full interpreted pass over the hash array. Kept as
-    * the executable spec for the native expression (and as the shape the
-    * DuckDB oracle mirrors). Pass an attribute, not an inline expression:
-    * the hash array is referenced once per bit (32x).
-    */
-  def simhash32Reference(hashes: Column): Column =
-    (0 until 32).map { j =>
-      val bitSum = aggregate(hashes, lit(0L),
-        (a, h) => a + shiftright(h, j).bitwiseAND(lit(1L)) * 2L - 1L)
-      when(bitSum >= 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
 
   /** Hamming distance between two simhash sketches (bit-count of xor). */
   def hammingDist(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -356,10 +325,12 @@ object Dedup {
     // rounds, and the label frame returns as a LocalRelation whose
     // size the planner KNOWS (downstream joins broadcast it on plain
     // statistics, no hint). The collect is bounded per partition
-    // (cap ≈ bound/numPartitions), so an over-bound graph transfers
-    // at most ~bound rows before falling back to the distributed
-    // fixpoint — which, being the above-bound path by construction,
-    // joins node-sized label state through KEYED EXCHANGES, never a
+    // (cap = ⌈bound/P⌉ for P partitions), so an over-bound graph
+    // transfers at most bound + P edge rows before falling back
+    // to the distributed fixpoint (PlanAuditSpec "connectedComponents
+    // collect transfers at most bound + P rows" measures it). That
+    // fixpoint, being the above-bound path by construction, joins
+    // node-sized label state through KEYED EXCHANGES, never a
     // forced BroadcastExchange (the r13 verdict's billion-node OOM note;
     // PlanAuditSpec "connectedComponents above its local bound: no
     // forced broadcast, union-find labels" asserts it).
@@ -372,7 +343,8 @@ object Dedup {
     if (bound > 0 && longKeys) {
       val proj = edges.select(col(aCol), col(bCol))
       val rdd = proj.queryExecution.toRdd
-      val cap = math.max(bound / math.max(rdd.getNumPartitions, 1), 65536L)
+      val parts = math.max(rdd.getNumPartitions, 1)
+      val cap = bound / parts + (if (bound % parts == 0) 0L else 1L)
       val chunks = rdd.mapPartitions { it =>
         // null sentinel = this partition is over its cap or holds a null
         // key; either way the driver falls back to the distributed path.

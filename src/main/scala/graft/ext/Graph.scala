@@ -46,12 +46,14 @@ object Graph {
   /** Broadcast `state` into a join only when the caller-known row count
     * is under the configured bound; otherwise return it unhinted (keyed
     * exchange of the node-sized side — same plan shape, no driver/executor
-    * OOM at billion-node scale).
+    * OOM at billion-node scale). A bound of 0 never broadcasts, not even
+    * empty state (PlanAuditSpec "kCore with empty node state at
+    * nodeBroadcastRows=0: no BroadcastExchange").
     */
   private[ext] def maybeBroadcast(state: DataFrame, rows: Long): DataFrame = {
     val bound = state.sparkSession.conf.getOption(NodeBroadcastRowsKey)
       .map(_.toLong).getOrElse(NodeBroadcastRowsDefault)
-    if (rows <= bound) broadcast(state) else state
+    if (bound > 0 && rows <= bound) broadcast(state) else state
   }
 
   /** PageRank after `iters` synchronous iterations over a directed edge

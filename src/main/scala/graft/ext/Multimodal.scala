@@ -600,46 +600,14 @@ object Multimodal {
     // bit-pack aggregate — the sketch is now a pure projection (zero
     // exchanges; the old spelling cost three per sketch, and the char
     // explode was the catalog's densest row stream). Bit-for-bit equal
-    // to [[stubAHashDeclarative]] (MediaSpec pins it); oracles untouched.
+    // to the r12 declarative spelling (SuffixOpsSpec pins it); oracles
+    // untouched.
     docs
       .where(length(col(textCol)) > 0)
       .select(col(idCol).cast("long").as("doc_id"),
         graft.functions.RasterExpressions.stub_ahash_bits(col(textCol)).as("_h"))
       .select(col("doc_id"), col("_h").getField("lo").as("ahash_lo"),
         col("_h").getField("hi").as("ahash_hi"))
-
-  /** The r12 declarative spelling of [[stubAHash]], kept as the spec
-    * twin the native kernel is proved against (and as the documented
-    * distributed form: at ANY media size the kernel's per-row state is
-    * 2×64 longs, but a raster wider than one row's memory would shard
-    * back to exactly this keyed-aggregate shape).
-    */
-  def stubAHashDeclarative(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val byDoc = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-    docs
-      .where(length(col(textCol)) > 0)
-      // posexplode(split(text, "")) walks the string ONCE; the previous
-      // ascii(substring(_t, i+1, 1)) spelling re-scanned the string from
-      // the start per exploded row — O(L²) per doc at char granularity,
-      // measured as the dominant cost of the *_ahash family
-      .select(col(idCol).cast("long").as("doc_id"),
-        length(col(textCol)).cast("long").as("n"),
-        posexplode(split(col(textCol), "")).as(Seq("i", "ch")))
-      .groupBy(col("doc_id"), expr("i * 64 div n").as("b"))
-      .agg(sum(ascii(col("ch")).cast("long")).as("s"),
-        count(lit(1)).as("c"))
-      .withColumn("ts", sum(col("s")).over(byDoc))
-      .withColumn("tc", sum(col("c")).over(byDoc))
-      .withColumn("bit", col("s") * col("tc") > col("ts") * col("c"))
-      .groupBy("doc_id")
-      .agg(
-        sum(when(col("bit") && col("b") < 32,
-          expr("shiftleft(1L, cast(b as int))")).otherwise(lit(0L)))
-          .as("ahash_lo"),
-        sum(when(col("bit") && col("b") >= 32,
-          expr("shiftleft(1L, cast(b - 32 as int))")).otherwise(lit(0L)))
-          .as("ahash_hi"))
-  }
 
   /** Difference hash (dHash) on the same 1-D stub raster: a 72-cell
     * grid (9 columns × 8 rows in the classic 2-D layout, flattened),
@@ -653,7 +621,7 @@ object Multimodal {
   def stubDHash(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     // r13: native one-pass kernel, the stubAHash note — the adjacent-
     // cell self-join becomes an in-kernel neighbor compare. Proved
-    // equal to [[stubDHashDeclarative]] in MediaSpec.
+    // equal to the r12 declarative spelling in SuffixOpsSpec.
     docs
       .where(length(col(textCol)) > 0)
       .select(col(idCol).cast("long").as("doc_id"),
@@ -663,35 +631,6 @@ object Multimodal {
       .where(col("_h").isNotNull)
       .select(col("doc_id"), col("_h").getField("lo").as("dhash_lo"),
         col("_h").getField("hi").as("dhash_hi"))
-
-  /** The r12 declarative spelling of [[stubDHash]] (spec twin — see
-    * [[stubAHashDeclarative]]).
-    */
-  def stubDHashDeclarative(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val cells = docs
-      .where(length(col(textCol)) > 0)
-      .select(col(idCol).cast("long").as("doc_id"),
-        length(col(textCol)).cast("long").as("n"),
-        posexplode(split(col(textCol), "")).as(Seq("i", "ch")))
-      .groupBy(col("doc_id"), expr("i * 72 div n").as("b"))
-      .agg(sum(ascii(col("ch")).cast("long")).as("s"),
-        count(lit(1)).as("c"))
-    val right = cells.select(col("doc_id"), (col("b") - 1).as("b"),
-      col("s").as("s2"), col("c").as("c2"))
-    cells.join(right, Seq("doc_id", "b"))
-      .where(expr("b % 9") < 8)
-      .select(col("doc_id"),
-        expr("(b div 9) * 8 + b % 9").as("bx"),
-        (col("s") * col("c2") > col("s2") * col("c")).as("bit"))
-      .groupBy("doc_id")
-      .agg(
-        sum(when(col("bit") && col("bx") < 32,
-          expr("shiftleft(1L, cast(bx as int))")).otherwise(lit(0L)))
-          .as("dhash_lo"),
-        sum(when(col("bit") && col("bx") >= 32,
-          expr("shiftleft(1L, cast(bx - 32 as int))")).otherwise(lit(0L)))
-          .as("dhash_hi"))
-  }
 
   /** One perceptual frame hash of a video ([[videoAHash]]). */
   case class VideoFrameHash(doc_id: Long, frame_ix: Int, ahash: Long,
@@ -819,31 +758,6 @@ object Multimodal {
       .select(col("doc_id"), col("frame_ix"),
         col("_h").getField("lo").as("ahash_lo"),
         col("_h").getField("hi").as("ahash_hi"))
-
-  /** The r12 declarative spelling of [[stubFrameAHash]] (spec twin). */
-  def stubFrameAHashDeclarative(frames: DataFrame): DataFrame = {
-    val byFrame = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id"), col("frame_ix"))
-    frames
-      .where(length(col("text")) > 0)
-      .select(col("doc_id"), col("frame_ix"),
-        length(col("text")).cast("long").as("n"),
-        posexplode(split(col("text"), "")).as(Seq("i", "ch")))
-      .groupBy(col("doc_id"), col("frame_ix"), expr("i * 64 div n").as("b"))
-      .agg(sum(ascii(col("ch")).cast("long")).as("s"),
-        count(lit(1)).as("c"))
-      .withColumn("ts", sum(col("s")).over(byFrame))
-      .withColumn("tc", sum(col("c")).over(byFrame))
-      .withColumn("bit", col("s") * col("tc") > col("ts") * col("c"))
-      .groupBy("doc_id", "frame_ix")
-      .agg(
-        sum(when(col("bit") && col("b") < 32,
-          expr("shiftleft(1L, cast(b as int))")).otherwise(lit(0L)))
-          .as("ahash_lo"),
-        sum(when(col("bit") && col("b") >= 32,
-          expr("shiftleft(1L, cast(b - 32 as int))")).otherwise(lit(0L)))
-          .as("ahash_hi"))
-  }
 
   /** Uniform "brightness shift" of the stub raster: every byte value +1
     * (chr(ascii+1) per char — ASCII 32..125 stays printable ASCII).

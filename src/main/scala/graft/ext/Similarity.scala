@@ -338,10 +338,10 @@ object Similarity {
     // time and shipped as a codegen reference object — the
     // broadcast-constant pattern (quantile boundaries, LSH planes). The
     // encode itself is then ONE native expression per row inside
-    // whole-stage codegen; the declarative spelling it replaces
-    // ([[pqEncodeReference]], proved bit-identical in
-    // VectorExpressionsSpec) is CodegenFallback and paid ~1,300
-    // interpreted lambda evaluations per row.
+    // whole-stage codegen; the declarative spelling it replaces (nested
+    // transform/array_min over slices, the DuckDB oracle's staging,
+    // proved bit-identical in VectorExpressionsSpec) is CodegenFallback
+    // and paid ~1,300 interpreted lambda evaluations per row.
     val bookRows = staged.where(col(idCol) < k)
       .select(col(idCol).cast("long"), col("vecd")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
@@ -350,32 +350,6 @@ object Similarity {
     staged.select(col(idCol),
       graft.functions.VectorExpressions.pq_codes(col("vecd"),
         bookRows.map(_._2), bookRows.map(_._1), m).as("codes"))
-  }
-
-  /** Declarative reference form of [[pqEncode]] — the executable spec the
-    * native expression is proved against (same staging as the DuckDB
-    * oracle): nested transform/array_min over slices, argmin of
-    * round(a·a − 2·a·b + b·b, 6) with ties to the lowest code id.
-    */
-  def pqEncodeReference(embeddings: DataFrame, idCol: String, vecCol: String,
-      m: Int, k: Int, dims: Int): DataFrame = {
-    require(dims % m == 0, s"dims=$dims must divide into m=$m subspaces")
-    val sub = dims / m
-    val staged = embeddings.select(col(idCol), asDouble(col(vecCol)).as("vecd"))
-    val codebook = broadcast(staged.where(col(idCol) < k)
-      .agg(array_sort(collect_list(struct(col(idCol).as("code"),
-        col("vecd").as("cvec")))).as("_book")))
-    val codes = transform(sequence(lit(0), lit(m - 1)), j => {
-      // slice is 1-based; subvector of subspace j = dims [j*sub, j*sub+sub)
-      val sa = slice(col("vecd"), j * lit(sub) + 1, lit(sub))
-      array_min(transform(col("_book"), c => {
-        val sb = slice(c("cvec"), j * lit(sub) + 1, lit(sub))
-        val d = dot(sa, sa) - lit(2.0) * dot(sa, sb) + dot(sb, sb)
-        struct(round(d, 6).as("d"), c("code").as("code"))
-      })).getField("code")
-    })
-    staged.crossJoin(codebook)
-      .select(col(idCol), codes.as("codes"))
   }
 
   /** Asymmetric-distance (ADC) top-k over PQ codes: the query stays full

@@ -46,7 +46,7 @@ object SuffixOps {
 
   /** Longest common prefix of two token arrays — the native codegen
     * `token_lcp` walk (r13; one pass, stops at the first mismatch).
-    * Replaces the declarative aggregate-over-slices spelling below,
+    * Replaces the r12 declarative aggregate-over-slices spelling,
     * which ran as an INTERPRETED higher-order function doing O(W²)
     * slice allocations + compares per pair — measured as the dominant
     * task time of the suffix family. Equal for every input because
@@ -54,13 +54,6 @@ object SuffixOps {
     */
   def lcp(a: Column, b: Column): Column =
     graft.functions.SuffixExpressions.token_lcp(a, b)
-
-  /** The r12 declarative spelling of [[lcp]] (spec twin). */
-  def lcpDeclarative(a: Column, b: Column): Column =
-    aggregate(sequence(lit(1), least(size(a), size(b))), lit(0),
-      (acc, j) => acc +
-        when(slice(a, lit(1), j) === slice(b, lit(1), j), lit(1))
-          .otherwise(lit(0)))
 
   /** Longest repeated token span WITHIN each document: sort each doc's
     * suffixes (one doc-keyed window), take the max adjacent LCP; ties

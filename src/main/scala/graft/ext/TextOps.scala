@@ -136,14 +136,9 @@ object TextOps {
   /** Order-sensitive document fingerprint: polynomial rolling hash over the
     * token-hash sequence, mod 2^31-1. acc stays < 2^31 so acc*31 + h32
     * (< 2^36 + 2^32) never overflows a long. Routed through the native
-    * one-pass [[graft.functions.RollingHash]] (the `aggregate` HOF twin is
-    * [[fingerprintReference]], kept as the executable spec / oracle shape).
+    * one-pass [[graft.functions.RollingHash]]; equal to the `aggregate`
+    * HOF spelling the oracle mirrors (VectorExpressionsSpec proves it).
     */
   def fingerprint(toks: Column): Column =
     graft.functions.HashExpressions.rolling_hash(hashAll(toks), 31L, 2147483647L)
-
-  /** Declarative reference form of [[fingerprint]]. */
-  def fingerprintReference(toks: Column): Column =
-    aggregate(hashAll(toks), lit(0L),
-      (acc, h) => pmod(acc * 31 + h, lit(2147483647L)))
 }

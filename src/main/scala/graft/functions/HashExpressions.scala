@@ -255,15 +255,15 @@ case class Md5Hash32Array(child: Expression) extends UnaryExpression {
 }
 
 /** `simhash32(array<bigint>) -> bigint` — the 32-bit SimHash sketch over
-  * pre-hashed tokens in ONE pass. The declarative form
-  * (`Dedup.simhash32Reference`) evaluates 32 separate `aggregate` HOFs —
-  * 32 interpreted passes over the hash array per document, each lambda
-  * re-dispatched per element. This expression counts all 32 bit positions
-  * in a single primitive loop (bit j of the sketch is set iff ones[j]
-  * makes the +-1 sum non-negative, i.e. 2*ones[j] >= n) and stays inside
-  * whole-stage codegen. Result is bit-identical to the declarative form
-  * for null-free input (proved in VectorExpressionsSpec); a null element
-  * yields a null sketch.
+  * pre-hashed tokens in ONE pass. The declarative form (the twin
+  * VectorExpressionsSpec compares against) evaluates 32 separate
+  * `aggregate` HOFs — 32 interpreted passes over the hash array per
+  * document, each lambda re-dispatched per element. This expression
+  * counts all 32 bit positions in a single primitive loop (bit j of the
+  * sketch is set iff ones[j] makes the +-1 sum non-negative, i.e.
+  * 2*ones[j] >= n) and stays inside whole-stage codegen. Result is
+  * bit-identical to the declarative form for null-free input (proved in
+  * VectorExpressionsSpec); a null element yields a null sketch.
   */
 case class Simhash32(child: Expression) extends UnaryExpression {
 
@@ -294,7 +294,7 @@ case class Simhash32(child: Expression) extends UnaryExpression {
 
 /** `shingle_hashes(array<bigint>) -> array<bigint>` — the Horner-rolling
   * word-n-shingle combination in ONE primitive loop. The declarative form
-  * (`Dedup.shingleHashesReference`: `transform(sequence(...), i ->
+  * (VectorExpressionsSpec's twin: `transform(sequence(...), i ->
   * fold(element_at...))`) routes through two CodegenFallback HOFs with
   * per-element interpreted lambda dispatch AND allocates the index
   * sequence per row; this expression reads the window directly and stays

@@ -31,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * cell index `i · cells div n` in long arithmetic, exact integer
   * cross-multiplied mean compare `s·tc > ts·c` — so results are
   * hash-identical to the old plan and the DuckDB oracles are untouched.
-  * MediaSpec pins kernel == declarative spelling on fixture text.
+  * SuffixOpsSpec pins kernel == declarative spelling on fixture text.
   */
 object RasterExprUtil {
 

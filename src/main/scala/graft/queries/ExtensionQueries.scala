@@ -1076,7 +1076,7 @@ object ExtensionQueries extends QueryPack {
     // (ext/Sketches): per-day distinct users over events. The sketch
     // spelling (one scan → KB-sized mergeable per-day sketches → any
     // rollup by union) is pinned to THIS query within HLL rel-error in
-    // SketchesSpec — sketch estimates aren't portable across engines, so
+    // SketchSpec — sketch estimates aren't portable across engines, so
     // the exact spelling is what the DuckDB oracle checks (same pattern
     // as the quantile sketches, SURVEY §7.4.2).
     "distinct_users_daily" -> ((s, d) =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.ext.Similarity
 
 /** ANN quality measurement (dev tool): recall@k of the approximate
@@ -24,13 +23,7 @@ object AnnRecall {
     val nQueries = args.headOption.map(_.toInt).getOrElse(20)
     val k = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Sessions.local(cpus.toInt, "graft-ann-recall")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val e = graft.Tables.embeddings(spark, d)

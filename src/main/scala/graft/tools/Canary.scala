@@ -55,11 +55,7 @@ object Canary {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(cpus.toInt, "graft-canary")
     spark.sparkContext.setLogLevel("WARN")
     println(f"[canary] jvm_loop_1e9=${loopSec()}%.2f s  " +
       f"range_2e9_sum=${rangeSec(spark, cpus.toInt)}%.2f s  cores=$cpus")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev evidence for the incremental cluster store's scale claim: ingest
   * cost per batch must track the BATCH, not the accumulated corpus —
   * non-compacting commits write only batch-sized deltas, the base
@@ -19,13 +17,7 @@ object ClusterProbe {
     val nBatches = args.lift(0).map(_.toInt).getOrElse(16)
     val perBatch = args.lift(1).map(_.toInt).getOrElse(2000)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Sessions.local(cpus.toInt, "graft-cluster-probe")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

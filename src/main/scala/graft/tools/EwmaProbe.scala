@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-giant-key EWMA probe (dev evidence for the recursive segmentation):
@@ -14,13 +13,7 @@ import org.apache.spark.sql.functions._
 object EwmaProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1600000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Sessions.local(32, "graft-ewma-probe")
     spark.sparkContext.setLogLevel("WARN")
 
     def build(rows: Long, dir: String): Unit =

@@ -1,16 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 object Explain {
   def main(args: Array[String]): Unit = {
     val d = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Sessions.local(8, "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     for (name <- args) {
       println(s"======== $name ========")

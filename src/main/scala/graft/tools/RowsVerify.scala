@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Rows-only verify pass (dev evidence for scale rehearsals above the
   * oracle SFs, where DuckDB can't be run): executes every catalog query
   * once at the given fixture dir and records its row count (or error),
@@ -16,13 +14,8 @@ object RowsVerify {
     val outPath = args(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Sessions.local(cpus.toInt, "graft-rows-verify")
+    spark.conf.set("spark.sql.shuffle.partitions", shuffleParts)
     spark.sparkContext.setLogLevel("WARN")
     val results = graft.SparkEntry.queries.toSeq.sortBy(_._1).map {
       case (name, fn) =>

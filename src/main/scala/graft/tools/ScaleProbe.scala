@@ -386,26 +386,21 @@ object ScaleProbe {
     val shufflePartitions =
       if (sys.env.get("SPARK_GRAFT_FIXED_PARTS").contains("1")) cpus.toInt
       else math.max(cpus.toInt, cpus.toInt * factor / 4)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // experiment knob: prefer shuffled-hash over sort-merge joins
-      // (per-partition hash build instead of sorting both sides)
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SHJ", "0") != "1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // recursive_cte_reach produces rows ∝ corpus; Spark's 1M-row
-      // recursion safety valve (spark.sql.cteRecursionRowLimit) trips at
-      // 64× — a config ceiling, not a scale defect. Sized to the probe,
-      // as a production job would size it to its data.
-      .config("spark.sql.cteRecursionRowLimit", 100000000)
-      // experiment knob: exclude engine optimizer rules (e.g.
-      // graft.plans.RankLimitRewrite) to measure a rewrite's effect
-      .config("spark.sql.optimizer.excludedRules",
-        sys.env.getOrElse("SPARK_GRAFT_EXCLUDE_RULES", ""))
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Sessions.local(cpus.toInt, "graft-scale-probe")
+    spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toLong)
+    // experiment knob: prefer shuffled-hash over sort-merge joins
+    // (per-partition hash build instead of sorting both sides)
+    spark.conf.set("spark.sql.join.preferSortMergeJoin",
+      sys.env.getOrElse("SPARK_GRAFT_PREFER_SHJ", "0") != "1")
+    // recursive_cte_reach produces rows ∝ corpus; Spark's 1M-row
+    // recursion safety valve (spark.sql.cteRecursionRowLimit) trips at
+    // 64× — a config ceiling, not a scale defect. Sized to the probe,
+    // as a production job would size it to its data.
+    spark.conf.set("spark.sql.cteRecursionRowLimit", 100000000L)
+    // experiment knob: exclude engine optimizer rules (e.g.
+    // graft.plans.RankLimitRewrite) to measure a rewrite's effect
+    spark.conf.set("spark.sql.optimizer.excludedRules",
+      sys.env.getOrElse("SPARK_GRAFT_EXCLUDE_RULES", ""))
     spark.sparkContext.setLogLevel("WARN")
 
     build(spark, base, out, factor, compactTime)

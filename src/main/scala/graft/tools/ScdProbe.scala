@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev evidence for the incremental SCD2 store's scale claim: ingest
   * cost per batch must track the BATCH (and its keys' change counts),
   * not the accumulated dimension — a non-compacting commit writes only
@@ -22,13 +20,7 @@ object ScdProbe {
     val newPer = args.lift(1).map(_.toInt).getOrElse(100000)
     val updPer = args.lift(2).map(_.toInt).getOrElse(100000)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Sessions.local(cpus.toInt, "graft-scd-probe")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

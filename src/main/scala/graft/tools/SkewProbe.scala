@@ -142,14 +142,9 @@ object SkewProbe {
     val base = "/root/testdata/sf0.1"
     val out = s"/tmp/graft_skew_x$factor"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        math.max(cpus.toInt, cpus.toInt * factor / 4))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Sessions.local(cpus.toInt, "graft-skew-probe")
+    spark.conf.set("spark.sql.shuffle.partitions",
+      math.max(cpus.toInt, cpus.toInt * factor / 4).toLong)
     spark.sparkContext.setLogLevel("WARN")
     val listener = new SkewListener
     spark.sparkContext.addSparkListener(listener)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Generic per-query timer (dev tool): warms each named query at sf0.001,
   * then prints min-of-3 wall-clock at the target SF — the same protocol as
   * graft.Bench, for one query at a time.
@@ -10,19 +8,13 @@ object Time {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_CONF="k1=v1;k2=v2" injects extra SQL confs (A/B knobs).
+    // SPARK_GRAFT_CONF="k1=v1;k2=v2" sets extra runtime SQL confs (A/B knobs).
     val extra = sys.env.getOrElse("SPARK_GRAFT_CONF", "").split(';')
       .filter(_.contains('=')).map { kv =>
         val Array(k, v) = kv.split("=", 2); (k, v)
       }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-    extra.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = graft.Sessions.local(cpus.toInt, "graft-time")
+    extra.foreach { case (k, v) => spark.conf.set(k, v) }
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_HONEST=1: materialize via toRdd.count() so Catalyst
     // cannot column-prune payload expressions through the count (the

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** High-cardinality-key stress for the TopKPerKey operator, meant to run
@@ -19,15 +18,9 @@ object TopKStress {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(20000000L)
     val unsafe = args.lift(1).contains("unsafe")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.topk.spillBytes",
-        if (unsafe) Long.MaxValue.toString else (64L << 20).toString)
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Sessions.local(8, "graft-topk-stress")
+    spark.conf.set("spark.graft.topk.spillBytes",
+      if (unsafe) Long.MaxValue else 64L << 20)
     spark.sparkContext.setLogLevel("WARN")
 
     val df = spark.range(rows).select(

@@ -4,7 +4,7 @@ import org.apache.spark.SparkContext
 
 /** Core-side companion of `sql.graftbridge.Bridge`: the one
   * `private[spark]` accessor the measurement tools need — draining the
-  * async listener bus so per-query metric accumulation (ShuffleAudit)
+  * async listener bus so per-query metric accumulation (tools/JobAudit)
   * reads a complete picture before detaching its listener.
   */
 object CoreBridge {

@@ -535,6 +535,29 @@ class PlanAuditSpec extends SparkSpec {
         offenders.mkString("\n"))
   }
 
+  /** Runs `body` with `confs` set (restored afterwards) and returns its
+    * result plus the executed plan of every query it ran.
+    */
+  private def withAuditedPlans[T](confs: Seq[(String, String)])(body: => T): (T, Seq[String]) = {
+    val plans = scala.collection.mutable.ArrayBuffer[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan.toString }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val sc = spark.sparkContext
+    org.apache.spark.graftbridge.CoreBridge.waitListeners(sc)
+    spark.listenerManager.register(listener)
+    val out = try body finally {
+      org.apache.spark.graftbridge.CoreBridge.waitListeners(sc)
+      spark.listenerManager.unregister(listener)
+      saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    (out, plans.toSeq)
+  }
+
   test("connectedComponents above its local bound: no forced broadcast, union-find labels") {
     // The distributed fixpoint is the above-bound path: node-sized label
     // state joins through keyed exchanges, never a broadcast hint
@@ -551,29 +574,73 @@ class PlanAuditSpec extends SparkSpec {
       Seq.fill(40)((100L + rng.nextInt(60), 100L + rng.nextInt(60)))).toDF("id_a", "id_b")
     val local = Dedup.connectedComponents(edges, "id_a", "id_b")
       .as[(Long, Long)].collect().toMap
-    val plans = scala.collection.mutable.ArrayBuffer[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-        plans.synchronized { plans += qe.executedPlan.toString }
-      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    val confs = Seq(Dedup.CcLocalEdgeBoundKey -> "0", "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    val sc = spark.sparkContext
-    org.apache.spark.graftbridge.CoreBridge.waitListeners(sc)
-    spark.listenerManager.register(listener)
-    val distributed = try {
+    val (distributed, plans) = withAuditedPlans(Seq(Dedup.CcLocalEdgeBoundKey -> "0",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
       Dedup.connectedComponents(edges, "id_a", "id_b").as[(Long, Long)].collect().toMap
-    } finally {
-      org.apache.spark.graftbridge.CoreBridge.waitListeners(sc)
-      spark.listenerManager.unregister(listener)
-      saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     }
     assert(plans.nonEmpty)
     val broadcast = plans.filter(_.contains("BroadcastExchange"))
     assert(broadcast.isEmpty, broadcast.mkString("\n---\n"))
     assert(distributed == local)
+  }
+
+  test("connectedComponents collect transfers at most bound + P rows, then union-find labels") {
+    // 64 partitions of 1,000 edges under a 32,000-edge bound: the cap is
+    // ⌈32,000 / 64⌉ = 500 edges per partition, so every partition is over
+    // it and the collect job may return at most bound + P edge rows (16 B
+    // each) before the distributed fallback. A 65,536-row floor per
+    // partition would let all 64,000 edges (~1 MB) reach the driver first.
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, when}
+    import graft.ext.Dedup
+    val parts = 64
+    val bound = 32000L
+    // paths of 5 nodes: i -> i+1 inside each block of five
+    val edges = spark.range(0, parts * 1000L, 1, parts).select(col("id").as("id_a"),
+      when(col("id") % 5 === 4, col("id")).otherwise(col("id") + 1).as("id_b"))
+    assert(edges.rdd.getNumPartitions == parts)
+    val local = Dedup.connectedComponents(edges, "id_a", "id_b")
+      .as[(Long, Long)].collect().toMap
+    final class Collects extends org.apache.spark.scheduler.SparkListener {
+      var stages = Vector.empty[(Int, Long)] // (tasks, summed task result bytes)
+      override def onStageCompleted(
+          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (s.stageInfo.name.startsWith("collect at Dedup.scala"))
+          stages :+= (s.stageInfo.numTasks -> s.stageInfo.taskMetrics.resultSize)
+    }
+    val collects = new Collects
+    val sc = spark.sparkContext
+    sc.addSparkListener(collects)
+    val (bounded, plans) = try withAuditedPlans(Seq(Dedup.CcLocalEdgeBoundKey -> bound.toString)) {
+      Dedup.connectedComponents(edges, "id_a", "id_b").as[(Long, Long)].collect().toMap
+    } finally sc.removeSparkListener(collects)
+    assert(plans.nonEmpty)
+    assert(collects.stages.map(_._1) == Seq(parts), collects.stages)
+    // per-task envelope (accumulator updates, array header): 4 KB
+    val limit = (bound + parts) * 16 + parts * 4096L
+    val resultBytes = collects.stages.map(_._2).sum
+    assert(resultBytes <= limit, s"collect returned $resultBytes bytes, limit $limit")
+    assert(local.size == parts * 1000 && local.values.toSet.size == parts * 200)
+    assert(bounded == local)
+  }
+
+  test("kCore with empty node state at nodeBroadcastRows=0: no BroadcastExchange") {
+    // A star's centre is the only node with degree >= k (the max degree),
+    // and it keeps no neighbour in round 2, so the final joins take 0 rows
+    // of node state. A bound of 0 never broadcasts, not even empty state;
+    // the planner's own size threshold is off (-1), so any
+    // BroadcastExchange left would be one the code forces.
+    import spark.implicits._
+    import graft.ext.Graph
+    val star = Seq((1L, 2L), (1L, 3L), (1L, 4L), (1L, 5L)).toDF("u", "v")
+    val (core, plans) = withAuditedPlans(Seq(Graph.NodeBroadcastRowsKey -> "0",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
+      Graph.kCore(star, "u", "v", degQuantile = 1.0, rounds = 3).collect()
+    }
+    assert(core.isEmpty)
+    assert(plans.nonEmpty)
+    val broadcast = plans.filter(_.contains("BroadcastExchange"))
+    assert(broadcast.isEmpty, broadcast.mkString("\n---\n"))
   }
 
   test("sessionize batch: one shuffle keyed by user (agg reuses window partitioning)") {

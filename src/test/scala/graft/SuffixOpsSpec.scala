@@ -141,7 +141,7 @@ class SuffixOpsSpec extends SparkSpec {
       .toDF("a", "b")
     val r = pairs.select(
       graft.ext.SuffixOps.lcp(col("a"), col("b")).as("fast"),
-      graft.ext.SuffixOps.lcpDeclarative(col("a"), col("b")).as("slow"))
+      DeclarativeTwins.lcpDeclarative(col("a"), col("b")).as("slow"))
       .collect()
     r.foreach(row => assert(row.getInt(0) === row.getInt(1)))
   }
@@ -149,14 +149,14 @@ class SuffixOpsSpec extends SparkSpec {
   test("native stub_ahash_bits equals the declarative stubAHash") {
     val fast = Multimodal.stubAHash(kernelFixtures, "doc_id", "text")
       .orderBy("doc_id").collect().toSeq
-    val slow = Multimodal.stubAHashDeclarative(kernelFixtures, "doc_id", "text")
+    val slow = DeclarativeTwins.stubAHashDeclarative(kernelFixtures, "doc_id", "text")
       .orderBy("doc_id").collect().toSeq
     assert(fast.map(_.toSeq) === slow.map(_.toSeq))
     // fixture corpus too
     val d = graft.Tables.documents(spark, sf0001)
     val f2 = Multimodal.stubAHash(d, "doc_id", "text")
       .orderBy("doc_id").collect().toSeq
-    val s2 = Multimodal.stubAHashDeclarative(d, "doc_id", "text")
+    val s2 = DeclarativeTwins.stubAHashDeclarative(d, "doc_id", "text")
       .orderBy("doc_id").collect().toSeq
     assert(f2.map(_.toSeq) === s2.map(_.toSeq))
   }
@@ -164,7 +164,7 @@ class SuffixOpsSpec extends SparkSpec {
   test("native stub_dhash_bits equals the declarative stubDHash") {
     val fast = Multimodal.stubDHash(kernelFixtures, "doc_id", "text")
       .orderBy("doc_id").collect().toSeq
-    val slow = Multimodal.stubDHashDeclarative(kernelFixtures, "doc_id", "text")
+    val slow = DeclarativeTwins.stubDHashDeclarative(kernelFixtures, "doc_id", "text")
       .orderBy("doc_id").collect().toSeq
     assert(fast.map(_.toSeq) === slow.map(_.toSeq))
   }
@@ -177,7 +177,7 @@ class SuffixOpsSpec extends SparkSpec {
         substring_index(col("text"), " ", 3).as("text"))
     val fast = Multimodal.stubFrameAHash(frames)
       .orderBy("doc_id", "frame_ix").collect().toSeq
-    val slow = Multimodal.stubFrameAHashDeclarative(frames)
+    val slow = DeclarativeTwins.stubFrameAHashDeclarative(frames)
       .orderBy("doc_id", "frame_ix").collect().toSeq
     assert(fast.map(_.toSeq) === slow.map(_.toSeq))
   }

@@ -33,7 +33,7 @@ class VectorExpressionsSpec extends SparkSpec {
       .select($"doc_id", TextOps.hashAll(TextOps.tokens($"text")).as("th"))
     for (n <- Seq(2, 3, 5)) {
       val mismatches = staged.select(
-        (Dedup.shingleHashes($"th", n) =!= Dedup.shingleHashesReference($"th", n))
+        (Dedup.shingleHashes($"th", n) =!= DeclarativeTwins.shingleHashesReference($"th", n))
           .as("bad")).where($"bad").count()
       assert(mismatches == 0, s"native shingle hashes diverge at n=$n")
     }
@@ -44,7 +44,7 @@ class VectorExpressionsSpec extends SparkSpec {
     // null elements null every window containing them
     val withNull = Seq(Seq(Some(1L), None, Some(3L), Some(4L))).toDF("th")
     val nh = withNull.select(Dedup.shingleHashes($"th", 3)).as[Seq[Option[Long]]].head()
-    val ref = withNull.select(Dedup.shingleHashesReference($"th", 3))
+    val ref = withNull.select(DeclarativeTwins.shingleHashesReference($"th", 3))
       .as[Seq[Option[Long]]].head()
     assert(nh == ref && nh.count(_.isEmpty) == 2, s"null propagation: $nh vs $ref")
   }
@@ -55,7 +55,7 @@ class VectorExpressionsSpec extends SparkSpec {
       .select($"doc_id", TextOps.hashAll(TextOps.tokens($"text")).as("th"))
       .select($"doc_id", Dedup.shingleHashes($"th").as("hs"))
     val native = staged.select($"doc_id" +: Dedup.signaturesFromHashes($"hs"): _*)
-    val ref = staged.select($"doc_id" +: Dedup.signaturesFromHashesReference($"hs"): _*)
+    val ref = staged.select($"doc_id" +: DeclarativeTwins.signaturesFromHashesReference($"hs"): _*)
     assert(native.except(ref).isEmpty && ref.except(native).isEmpty,
       "native minhash signatures diverge from the declarative form")
     // no non-null elements -> null signature components (array_min semantics)
@@ -69,7 +69,7 @@ class VectorExpressionsSpec extends SparkSpec {
     import graft.ext.TextOps
     val docs = Tables.documents(spark, sf0001)
     val native = docs.select($"doc_id", TextOps.fingerprint(TextOps.tokens($"text")).as("f"))
-    val ref = docs.select($"doc_id", TextOps.fingerprintReference(TextOps.tokens($"text")).as("f"))
+    val ref = docs.select($"doc_id", DeclarativeTwins.fingerprintReference(TextOps.tokens($"text")).as("f"))
     assert(native.except(ref).isEmpty && ref.except(native).isEmpty)
     // empty array -> 0 (the fold's zero); null element -> null
     import graft.functions.HashExpressions.rolling_hash
@@ -151,7 +151,7 @@ class VectorExpressionsSpec extends SparkSpec {
     val t = Tables.documents(spark, sf0001)
       .select($"doc_id", TextOps.hashAll(TextOps.tokens($"text")).as("h"))
     val diff = t.select(
-        (Dedup.simhash32FromHashes($"h") =!= Dedup.simhash32Reference($"h")).as("bad"))
+        (Dedup.simhash32FromHashes($"h") =!= DeclarativeTwins.simhash32Reference($"h")).as("bad"))
       .where($"bad").count()
     assert(diff == 0L)
     // empty array: every +-1 bit sum is 0 (>= 0), so all 32 bits set
@@ -168,7 +168,7 @@ class VectorExpressionsSpec extends SparkSpec {
     import graft.ext.Similarity
     val e = Tables.embeddings(spark, sf0001)
     val native = Similarity.pqEncode(e, "vec_id", "embedding", m = 8, k = 16, dims = 64)
-    val ref = Similarity.pqEncodeReference(e, "vec_id", "embedding", m = 8, k = 16, dims = 64)
+    val ref = DeclarativeTwins.pqEncodeReference(e, "vec_id", "embedding", m = 8, k = 16, dims = 64)
     val joined = native.withColumnRenamed("codes", "cn")
       .join(ref.withColumnRenamed("codes", "cr"), Seq("vec_id"))
     assert(joined.count() == e.count())
