@@ -53,6 +53,9 @@ object Sessions {
     *    100 TB (400k splits instead of 800k at the 128m default).
     *  - broadcast threshold stays default (10m): constant-size dims
     *    (nation/region) broadcast; anything scaling with data must not.
+    *    It is also the engine's driver budget (`ops/Bounds`): the
+    *    connected-components collect (threshold / 16 edges) and the
+    *    node-state broadcast hint of the graph algorithms both read it.
     *  - runtime bloom-filter join reduction ON: a selective dim filter
     *    (q3/q5-shaped joins) becomes a bloom filter pushed into the fact
     *    scan, dropping non-joining rows before the shuffle — at 100 TB

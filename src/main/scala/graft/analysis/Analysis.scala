@@ -27,15 +27,6 @@ object Analysis {
       .csv(dir)
       .na.drop(Seq("epoch_sec", "batch_events", "p95_latency_ms"))
 
-  /** P4: defensive projection — keep only the expected metric columns that
-    * are present (analyze_exp1.py:35-39); moot when S4's explicit schema is
-    * used, kept for schema-drifting inputs.
-    */
-  def defensiveProject(df: DataFrame): DataFrame = {
-    val expected = BatchMetrics.schema.fieldNames.filter(df.columns.contains)
-    df.select(expected.map(col).toSeq: _*)
-  }
-
   /** S5: summary CSV sink — single file, header, no index column
     * (analyze_exp1.py:110-111). `coalesce(1)` is correct here: the summary
     * is one row per run configuration, never large.

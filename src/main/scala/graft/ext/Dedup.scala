@@ -305,16 +305,18 @@ object Dedup {
       .select("doc_id", "chunk_id", "n_toks", "chunk_hash")
   }
 
-  /** Conf key bounding how many (directed, as-written) edge rows the
-    * component labeling may COLLECT to run the driver union-find; above
-    * it (or on null/non-long keys) the distributed fixpoint runs. The
-    * default (2M rows ≈ 32 MB of longs) is far below driver limits;
-    * production tunes it to its driver headroom. Tests set it to 0 to
-    * force the distributed spelling.
+  /** Component labels (node, label = component-min node id) of an edge
+    * list. Its edge bound follows the engine's one driver budget
+    * (`ops/Bounds`): each edge is two packed longs, 16 B, so up to
+    * `spark.sql.autoBroadcastJoinThreshold / 16` (directed, as-written)
+    * edge rows are COLLECTED for a driver union-find — 655,360 at the
+    * 10 MB default. Above it, on a threshold below 0, or on null/non-long
+    * keys, the distributed fixpoint runs. PlanAuditSpec pins both sides
+    * on the threshold alone: "connectedComponents above its local bound:
+    * no forced broadcast, union-find labels" (threshold -1) and
+    * "connectedComponents collect transfers at most bound + P rows, then
+    * union-find labels" (threshold 32,000 × 16 B).
     */
-  val CcLocalEdgeBoundKey = "spark.graft.cc.localEdgeBound"
-  val CcLocalEdgeBoundDefault = 2000000L
-
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20): DataFrame = {
     // r14 (guide §1.2 step 1 + §5): SCALE-ADAPTIVE spelling. Every
@@ -327,16 +329,12 @@ object Dedup {
     // statistics, no hint). The collect is bounded per partition
     // (cap = ⌈bound/P⌉ for P partitions), so an over-bound graph
     // transfers at most bound + P edge rows before falling back
-    // to the distributed fixpoint (PlanAuditSpec "connectedComponents
-    // collect transfers at most bound + P rows" measures it). That
-    // fixpoint, being the above-bound path by construction, joins
-    // node-sized label state through KEYED EXCHANGES, never a
-    // forced BroadcastExchange (the r13 verdict's billion-node OOM note;
-    // PlanAuditSpec "connectedComponents above its local bound: no
-    // forced broadcast, union-find labels" asserts it).
+    // to the distributed fixpoint. That fixpoint, being the above-bound
+    // path by construction, joins node-sized label state through KEYED
+    // EXCHANGES, never a forced BroadcastExchange (the r13 verdict's
+    // billion-node OOM note).
     val spark = edges.sparkSession
-    val bound = spark.conf.getOption(CcLocalEdgeBoundKey)
-      .map(_.toLong).getOrElse(CcLocalEdgeBoundDefault)
+    val bound = graft.ops.Bounds.maxRows(spark, 16L)
     val tA = edges.select(col(aCol)).schema.head.dataType
     val tB = edges.select(col(bCol)).schema.head.dataType
     val longKeys = tA == org.apache.spark.sql.types.LongType && tA == tB

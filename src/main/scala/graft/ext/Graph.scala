@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
 
 /** Iterative graph algorithms as keyed aggregations — the PageRank
@@ -30,30 +31,22 @@ object Graph {
   val DampNum = 85L          // damping 0.85 as an exact integer ratio
   val DampDen = 100L
 
-  /** Conf key bounding how many ROWS of node-sized iteration state may
-    * ride as a forced BroadcastExchange; above it the join is left
-    * unhinted so the planner keys an exchange of the node-sized side
-    * instead (r14, the r13 verdict's billion-node flip, now code instead
-    * of prose). Default 16M rows ≈ 256 MB of (long, long) state — a few
-    * hundred MB per executor is the broadcast comfort zone (guide §3.1,
-    * well under the 8 GB relation cap); a billion-node graph's state
-    * (~16 GB) must never broadcast. Production sizes it to executor
-    * headroom; tests set it to 0 to audit the above-bound spelling.
-    */
-  val NodeBroadcastRowsKey = "spark.graft.nodeBroadcastRows"
-  val NodeBroadcastRowsDefault = 16000000L
-
   /** Broadcast `state` into a join only when the caller-known row count
-    * is under the configured bound; otherwise return it unhinted (keyed
-    * exchange of the node-sized side — same plan shape, no driver/executor
-    * OOM at billion-node scale). A bound of 0 never broadcasts, not even
-    * empty state (PlanAuditSpec "kCore with empty node state at
-    * nodeBroadcastRows=0: no BroadcastExchange").
+    * fits the engine's one driver budget (`ops/Bounds`): `rows × rowBytes
+    * ≤ spark.sql.autoBroadcastJoinThreshold`, with `rowBytes` the planner's
+    * own per-row size estimate of the state's columns (24 B for a
+    * (long, long) row, so ~437k rows at the 10 MB default). Otherwise the
+    * state is returned unhinted and the planner keys an exchange of the
+    * node-sized side — same plan shape, no driver/executor OOM at
+    * billion-node scale. A threshold below 0 never broadcasts, not even
+    * empty state. PlanAuditSpec pins both sides: "maybeBroadcast hints at
+    * rows × rowBytes == threshold, not one row above" and "kCore with
+    * empty node state at threshold -1: no BroadcastExchange".
     */
-  private[ext] def maybeBroadcast(state: DataFrame, rows: Long): DataFrame = {
-    val bound = state.sparkSession.conf.getOption(NodeBroadcastRowsKey)
-      .map(_.toLong).getOrElse(NodeBroadcastRowsDefault)
-    if (bound > 0 && rows <= bound) broadcast(state) else state
+  private[graft] def maybeBroadcast(state: DataFrame, rows: Long): DataFrame = {
+    val rowBytes = EstimationUtils.getSizePerRow(state.queryExecution.analyzed.output)
+    if (graft.ops.Bounds.fits(state.sparkSession, rows, rowBytes.toLong)) broadcast(state)
+    else state
   }
 
   /** PageRank after `iters` synchronous iterations over a directed edge
@@ -98,8 +91,8 @@ object Graph {
       Seq("node"), "left_anti").localCheckpoint(false)
     val hasDangling = !dangNodes.isEmpty
     val teleport = ((Scale * 15L) / DampDen) / n
-    // Node-sized frames (ranks, dangling set) are broadcast WHEN UNDER THE
-    // CONFIGURED BOUND (maybeBroadcast): localCheckpoint drops size stats,
+    // Node-sized frames (ranks, dangling set) are broadcast WHEN THEY FIT
+    // THE DRIVER BUDGET (maybeBroadcast): localCheckpoint drops size stats,
     // so without the hint every per-iteration join would plan as a full
     // edge shuffle + sort — but above the bound the hint is withheld and
     // the join keys an exchange of the node-sized side instead (the
@@ -525,7 +518,7 @@ object Graph {
       .localCheckpoint(false)
     // Counts replace the old per-round isEmpty probes (same one job per
     // round over the pinned frontier) and gate the broadcasts: above the
-    // configured bound the joins key an exchange of the frontier/visited
+    // driver budget the joins key an exchange of the frontier/visited
     // side instead (maybeBroadcast).
     var frontierN = frontier.count()
     var visitedN = frontierN

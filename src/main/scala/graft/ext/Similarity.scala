@@ -53,27 +53,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** Exact embedding-cosine near-duplicate pairs, blocked on a partition
-    * column (e.g. a cluster/label id) so the pairwise join is per-key.
-    * The scale pattern for "find near-identical embeddings": block (or
-    * pre-cluster) first, verify cosine only within blocks.
-    */
-  def cosinePairs(embeddings: DataFrame, idCol: String, vecCol: String,
-      blockCol: String, minCos: Double): DataFrame = {
-    val staged = embeddings
-      .select(col(blockCol), col(idCol), asDouble(col(vecCol)).as("vecd"))
-      .select(col(blockCol), col(idCol), col("vecd"), norm(col("vecd")).as("nrm"))
-    val l = staged.select(col(blockCol), col(idCol).as("id_a"),
-      col("vecd").as("vec_a"), col("nrm").as("nrm_a"))
-    val r = staged.select(col(blockCol), col(idCol).as("id_b"),
-      col("vecd").as("vec_b"), col("nrm").as("nrm_b"))
-    l.join(r, Seq(blockCol))
-      .where(col("id_a") < col("id_b"))
-      .select(col(blockCol), col("id_a"), col("id_b"),
-        round(dot(col("vec_a"), col("vec_b")) / (col("nrm_a") * col("nrm_b")), 6).as("cos_sim"))
-      .where(col("cos_sim") >= minCos)
-  }
-
   /** IVF (inverted-file) ANN: partition vectors into `numCells` Voronoi
     * cells around deterministic seed centroids (the first `numCells` ids —
     * a k-means iteration would refine them, the plan shape is identical),
@@ -529,23 +508,6 @@ object Similarity {
     healthAgg(indexed)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/health")
   }
-
-  /** The cell-partitioned (cell, id, codes) frame for an index build or
-    * append — raw vectors or IVFADC residuals per `encoding`.
-    */
-  private def encodedFrame(embeddings: DataFrame, idCol: String,
-      vecCol: String, cents: Book, book: Book, m: Int,
-      encoding: String): DataFrame =
-    if (encoding == "residual")
-      residuals(embeddings, idCol, vecCol, cents)
-        .select(col("cell"), col(idCol),
-          graft.functions.VectorExpressions.pq_codes(col("resd"),
-            book.map(_._2), book.map(_._1), m).as("codes"))
-    else
-      ivfAssignWith(embeddings, idCol, vecCol, cents)
-        .select(col("cell"), col(idCol),
-          graft.functions.VectorExpressions.pq_codes(col("vecd"),
-            book.map(_._2), book.map(_._1), m).as("codes"))
 
   private def reconErrorFor(embeddings: DataFrame, idCol: String,
       vecCol: String, cents: Book, book: Book, m: Int,

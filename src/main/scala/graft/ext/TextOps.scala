@@ -64,14 +64,6 @@ object TextOps {
   def normalize(text: Column): Column =
     graft.functions.TextExpressions.normalize_text(text)
 
-  /** The original regex spelling of [[normalize]] — kept as the reference
-    * semantics the native expression is property-tested against (the
-    * regex form measured 14× at the 8× sweep: java.util.regex degrades
-    * ~3× under ANY task concurrency, see TextExpressions).
-    */
-  def normalizeRegex(text: Column): Column =
-    trim(regexp_replace(regexp_replace(lower(text), "[^a-z0-9\\s]", ""), "\\s+", " "))
-
   /** Quality features: token/char counts, mean token length, punctuation
     * ratio, stopword ratio — the classic cheap quality-score inputs.
     */
@@ -96,12 +88,6 @@ object TextOps {
 
   def punctCount(text: Column): Column =
     graft.functions.TextExpressions.punct_count(text)
-
-  /** The original regex spelling of [[punctCount]] — reference semantics
-    * for the native twin's property test.
-    */
-  def punctCountRegex(text: Column): Column =
-    size(regexp_extract_all(text, lit("[^a-zA-Z0-9\\s]"), lit(0)))
 
   def stopwordCount(toks: Column): Column =
     size(filter(toks, t => t.isin(stopwords.map(x => x: Any): _*)))

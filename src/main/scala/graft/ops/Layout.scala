@@ -69,17 +69,4 @@ object Layout {
       .sortWithinPartitions(col("_z"))
       .drop("_z")
       .write.mode(SaveMode.Overwrite).parquet(path)
-
-  /** Write `df` as a bucketed + sorted managed table (Hive-style layout):
-    * joins and aggregations on `bucketCols` against another table bucketed
-    * the same way need NO shuffle — the bucketing is a persisted
-    * hash-partitioning (see BucketingSpec for the shuffle-free plan
-    * proof).
-    */
-  def writeBucketed(df: DataFrame, table: String, buckets: Int,
-      bucketCols: Seq[String], sortCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy((bucketCols ++ sortCols).head, (bucketCols ++ sortCols).tail: _*)
-      .saveAsTable(table)
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Skew-mitigation pattern: two-phase salted aggregation. A hot grouping
   * key that would funnel into one reducer is split across `buckets`
@@ -31,17 +32,19 @@ object Salt {
     * max(session shuffle partitions, replicatedBytes / partitionBytes)
     * using optimizer size estimates; the explicit repartition satisfies
     * the join's required distribution, so no second exchange is added.
-    * `spark.graft.salt.partitionBytes` (default 8 MB of source-estimate
-    * bytes per partition) tunes the density — the default is deliberately
-    * small because the estimate is parquet FILE size: snappy+dictionary
-    * compression understates the in-memory hash-build footprint ~4-8×,
-    * so 8 MB of file bytes ≈ a comfortably-in-memory build per task.
+    * `partitionBytes` is Spark's AQE target partition size,
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, divided by 8
+    * (8 MB at the 64 MB default): the estimate is parquet FILE size, and
+    * snappy+dictionary compression understates the in-memory hash-build
+    * footprint ~4-8×, so 8 MB of file bytes ≈ a comfortably-in-memory
+    * build per task. PlanAuditSpec "saltedJoin repartition count follows
+    * advisoryPartitionSizeInBytes" pins the scaling.
     */
   def saltedJoin(probe: DataFrame, build: DataFrame, key: String,
       saltSource: Column, buckets: Int): DataFrame = {
     val conf = probe.sparkSession.sessionState.conf
-    val partitionBytes = conf
-      .getConfString("spark.graft.salt.partitionBytes", (8L << 20).toString).toLong
+    val partitionBytes =
+      math.max(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) / 8, 1L)
     val sessionParts = conf.numShufflePartitions
     def sizeOf(df: DataFrame): BigInt =
       df.queryExecution.optimizedPlan.stats.sizeInBytes

@@ -47,11 +47,7 @@ class KafkaIntegrationSpec extends SparkSpec {
     // S1 + T4: subscribe from EARLIEST (deterministic on a fresh topic)
     // and drain with AvailableNow so the query self-terminates after
     // consuming exactly the published backlog.
-    val raw = spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", broker)
-      .option("subscribe", topic)
-      .option("startingOffsets", "earliest")
-      .load()
+    val raw = MetricsJob.kafkaSource(spark, broker, topic, "earliest")
     val q = MetricsJob.withLatency(MetricsJob.parse(raw))
       .writeStream
       .foreachBatch(MetricsJob.writeBatch(spark, outDir) _)

@@ -27,6 +27,8 @@ object PlanAuditSpec {
 
 class PlanAuditSpec extends SparkSpec {
 
+  private val Threshold = "spark.sql.autoBroadcastJoinThreshold"
+
   private def plan(pack: Map[String, (org.apache.spark.sql.SparkSession, String) => DataFrame],
       name: String): (String, DataFrame) = {
     val df = pack(name)(spark, sf0001)
@@ -563,9 +565,10 @@ class PlanAuditSpec extends SparkSpec {
     // state joins through keyed exchanges, never a broadcast hint
     // (Dedup.connectedComponents). On a graph that large, no side fits the
     // planner's size-based broadcast threshold; this small graph stands in
-    // for it with that threshold off (-1), so any BroadcastExchange left
-    // would be one the code forces. Every query the call runs, and the
-    // read of its result, is audited.
+    // for it with that threshold off (-1). The threshold is also the
+    // collect's budget (ops/Bounds), so -1 forces the distributed spelling,
+    // and any BroadcastExchange left would be one the code forces. Every
+    // query the call runs, and the read of its result, is audited.
     import spark.implicits._
     import graft.ext.Dedup
     val rng = new scala.util.Random(7)
@@ -574,8 +577,7 @@ class PlanAuditSpec extends SparkSpec {
       Seq.fill(40)((100L + rng.nextInt(60), 100L + rng.nextInt(60)))).toDF("id_a", "id_b")
     val local = Dedup.connectedComponents(edges, "id_a", "id_b")
       .as[(Long, Long)].collect().toMap
-    val (distributed, plans) = withAuditedPlans(Seq(Dedup.CcLocalEdgeBoundKey -> "0",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
+    val (distributed, plans) = withAuditedPlans(Seq(Threshold -> "-1")) {
       Dedup.connectedComponents(edges, "id_a", "id_b").as[(Long, Long)].collect().toMap
     }
     assert(plans.nonEmpty)
@@ -585,7 +587,8 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("connectedComponents collect transfers at most bound + P rows, then union-find labels") {
-    // 64 partitions of 1,000 edges under a 32,000-edge bound: the cap is
+    // 64 partitions of 1,000 edges under a 32,000-edge bound (a threshold
+    // of 32,000 × 16 B, each edge two packed longs): the cap is
     // ⌈32,000 / 64⌉ = 500 edges per partition, so every partition is over
     // it and the collect job may return at most bound + P edge rows (16 B
     // each) before the distributed fallback. A 65,536-row floor per
@@ -611,7 +614,7 @@ class PlanAuditSpec extends SparkSpec {
     val collects = new Collects
     val sc = spark.sparkContext
     sc.addSparkListener(collects)
-    val (bounded, plans) = try withAuditedPlans(Seq(Dedup.CcLocalEdgeBoundKey -> bound.toString)) {
+    val (bounded, plans) = try withAuditedPlans(Seq(Threshold -> (bound * 16).toString)) {
       Dedup.connectedComponents(edges, "id_a", "id_b").as[(Long, Long)].collect().toMap
     } finally sc.removeSparkListener(collects)
     assert(plans.nonEmpty)
@@ -624,23 +627,80 @@ class PlanAuditSpec extends SparkSpec {
     assert(bounded == local)
   }
 
-  test("kCore with empty node state at nodeBroadcastRows=0: no BroadcastExchange") {
+  test("kCore with empty node state at threshold -1: no BroadcastExchange") {
     // A star's centre is the only node with degree >= k (the max degree),
     // and it keeps no neighbour in round 2, so the final joins take 0 rows
-    // of node state. A bound of 0 never broadcasts, not even empty state;
-    // the planner's own size threshold is off (-1), so any
-    // BroadcastExchange left would be one the code forces.
+    // of node state. A threshold below 0 never broadcasts, not even empty
+    // state, and it turns the planner's own size-based broadcasts off too,
+    // so any BroadcastExchange left would be one the code forces.
     import spark.implicits._
     import graft.ext.Graph
     val star = Seq((1L, 2L), (1L, 3L), (1L, 4L), (1L, 5L)).toDF("u", "v")
-    val (core, plans) = withAuditedPlans(Seq(Graph.NodeBroadcastRowsKey -> "0",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
+    val (core, plans) = withAuditedPlans(Seq(Threshold -> "-1")) {
       Graph.kCore(star, "u", "v", degQuantile = 1.0, rounds = 3).collect()
     }
     assert(core.isEmpty)
     assert(plans.nonEmpty)
     val broadcast = plans.filter(_.contains("BroadcastExchange"))
     assert(broadcast.isEmpty, broadcast.mkString("\n---\n"))
+  }
+
+  test("maybeBroadcast hints at rows × rowBytes == threshold, not one row above") {
+    // (long, long) node state: the planner's per-row estimate is an 8 B
+    // row overhead plus two 8 B longs. Only the hint is inspected: at so
+    // small a threshold the planner's own size-based broadcast could pick
+    // either side of a join on its own.
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    import graft.ext.Graph
+    val rows = 100L
+    val rowBytes = 24L
+    val state = spark.range(0, rows).selectExpr("id AS node", "id * 2 AS lbl")
+    def hinted(n: Long): Boolean =
+      Graph.maybeBroadcast(state, n).queryExecution.analyzed.collectFirst {
+        case h: ResolvedHint => h.hints.strategy.contains(BROADCAST)
+      }.getOrElse(false)
+    val ((atThreshold, oneAbove), _) =
+      withAuditedPlans(Seq(Threshold -> (rows * rowBytes).toString)) {
+        (hinted(rows), hinted(rows + 1))
+      }
+    assert(atThreshold, s"state of $rows rows × $rowBytes B must broadcast")
+    assert(!oneAbove, s"state of ${rows + 1} rows × $rowBytes B must not")
+  }
+
+  test("saltedJoin repartition count follows advisoryPartitionSizeInBytes") {
+    // Partitions = max(shuffle partitions, (build × buckets + probe) source
+    // bytes / (advisoryPartitionSizeInBytes / 8)). A 64 KB advisory size
+    // (8 KB per partition) lifts the count above the session's partition
+    // count at sf0.001, and halving it doubles the data-sized count; the
+    // 64 MB default (8 MB per partition) keeps the session's count.
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    val fact = Tables.lineitem(spark, sf0001).select(
+      col("l_orderkey").as("k"), col("l_linenumber"), col("l_quantity"))
+    val dim = Tables.orders(spark, sf0001).select(
+      col("o_orderkey").as("k"), col("o_orderpriority"))
+    val buckets = 8
+    def bytes(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val dataBytes = bytes(dim) * buckets + bytes(fact)
+    def partitions(advisory: Long): Set[Int] = {
+      val (counts, _) = withAuditedPlans(Seq(
+          "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory.toString)) {
+        graft.ops.Salt.saltedJoin(fact, dim, "k", col("l_linenumber"), buckets)
+          .queryExecution.analyzed.collect {
+            case r: RepartitionByExpression => r.numPartitions
+          }.toSet
+      }
+      counts
+    }
+    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    def expected(advisory: Long): Int =
+      (dataBytes / (advisory / 8)).max(BigInt(sessionParts)).toInt
+    assert(expected(64L << 10) > sessionParts,
+      s"$dataBytes source bytes must need more than $sessionParts partitions")
+    assert(expected(32L << 10) > expected(64L << 10))
+    Seq(64L << 10, 32L << 10, 64L << 20).foreach { advisory =>
+      assert(partitions(advisory) == Set(expected(advisory)), s"advisory $advisory B")
+    }
   }
 
   test("sessionize batch: one shuffle keyed by user (agg reuses window partitioning)") {

@@ -5,8 +5,8 @@ import java.io.File
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source lints over `src/main`: every session goes through the one
-  * factory (`Sessions`), and a comment that names a spec names one that
-  * exists.
+  * factory (`Sessions`), engine conf keys stay on a short allow-list,
+  * and a comment that names a spec names one that exists.
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -31,6 +31,20 @@ class SourceLintSpec extends AnyFunSuite {
       f <- scalaFiles("src/main") if f.getName != "Sessions.scala"
       (l, n) <- lines(f) if l.contains("SparkSession.builder()")
     } yield s"${f.getPath}:$n"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("spark.graft.* conf key literals in src/main are on the allow-list") {
+    // Scale-adaptive switches read Spark's own budgets (ops/Bounds); the
+    // one engine key left is an executor-side, per-partition spill budget
+    // that no Spark setting expresses.
+    val allowed = Set("spark.graft.topk.spillBytes")
+    val literal = "\"(spark\\.graft\\.[^\"]*)\"".r
+    val offenders = for {
+      f <- scalaFiles("src/main")
+      (l, n) <- lines(f)
+      m <- literal.findAllMatchIn(l) if !allowed(m.group(1))
+    } yield s"${f.getPath}:$n ${m.group(1)}"
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
