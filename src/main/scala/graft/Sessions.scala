@@ -21,6 +21,13 @@ import org.apache.spark.sql.SparkSession
   * per cached class: +95 to +107 MB once the whole catalog has run, about
   * +3 MB for a 13-query subset. A driver that builds its own session keeps
   * the default, so every engine driver goes through `local`.
+  *
+  * Checkpoint file manager: every micro-batch writes an offset-log and a
+  * commit-log entry through Spark's `CheckpointFileManager.createAtomic`.
+  * On a local path Spark's manager forks `chmod`/`readlink` processes for
+  * each one (about 35 ms per entry), so `engineDefaults` names
+  * `stream.LocalCheckpointFileManager`, which writes local entries with
+  * java.nio and leaves other schemes to Spark's code.
   */
 object Sessions {
 
@@ -30,6 +37,8 @@ object Sessions {
   private def engineDefaults(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.stream.LocalCheckpointFileManager].getName)
       .withExtensions(new graft.functions.GraftExtensions)
 
   def local(cores: Int, appName: String = "graft"): SparkSession = {
@@ -62,7 +71,9 @@ object Sessions {
     *    that is the difference between shuffling the table and shuffling
     *    the match set.
     *  - from `engineDefaults`: session TZ pinned UTC for deterministic
-    *    time semantics, the graft extensions, the codegen cache size.
+    *    time semantics, the graft extensions, the codegen cache size, and
+    *    the checkpoint file manager (fork-free on local paths; on HDFS or
+    *    an object store it is Spark's `FileContext` manager unchanged).
     *  - RocksDB state store: streaming state (watermarked dedup,
     *    sessionization, stream-stream joins) lives off-heap with
     *    incremental changelog checkpoints — at 100 TB/day the state no

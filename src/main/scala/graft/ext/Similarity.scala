@@ -472,9 +472,9 @@ object Similarity {
     // r13 (guide §1.2 step 1): ONE assign+encode pass serves both the
     // codes table and the health baseline — the old spelling ran the
     // full corpus argmax-assign + PQ-encode TWICE (once for codes, once
-    // inside reconErrorFor). The fused per-row frame is CODE-sized
-    // (cell + id + m code bytes + one long — no vectors), so pinning it
-    // is inside the §8 sketch-frame allowance.
+    // more for the reconstruction-error baseline). The fused per-row
+    // frame is CODE-sized (cell + id + m code bytes + one long — no
+    // vectors), so pinning it is inside the §8 sketch-frame allowance.
     val staged =
       if (encoding == "residual")
         residuals(embeddings, idCol, vecCol, cents)
@@ -508,13 +508,6 @@ object Similarity {
     healthAgg(indexed)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/health")
   }
-
-  private def reconErrorFor(embeddings: DataFrame, idCol: String,
-      vecCol: String, cents: Book, book: Book, m: Int,
-      encoding: String): DataFrame =
-    if (encoding == "residual")
-      pqReconErrorResidualWith(embeddings, idCol, vecCol, cents, book, m)
-    else pqReconErrorWith(embeddings, idCol, vecCol, cents, book, m)
 
   /** The index's code encoding — "raw" (codes of the vectors) or
     * "residual" (IVFADC: codes of v − centroid(cell)). Indexes written

@@ -1,8 +1,10 @@
 package graft.ops
 
-import java.io.File
+import java.io.{BufferedOutputStream, File, IOException, OutputStream}
+import java.nio.channels.{Channels, FileChannel}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, StandardCopyOption}
+import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.StandardOpenOption.{CREATE, READ, TRUNCATE_EXISTING, WRITE}
 
 /** Atomic file-based COMMIT POINT for multi-directory index structures
   * (the Lucene segments_N model, shared by the inverted-index segments
@@ -72,24 +74,13 @@ object Manifest {
     */
   def write(file: File, entries: Seq[String],
       maxBatch: Option[Long] = None): Unit = {
-    Option(file.getParentFile).foreach(_.mkdirs())
     val tmp = new File(file.getParentFile, file.getName + ".tmp")
     val header = maxBatch.map(b => s"#maxBatch=$b\n").getOrElse("")
     val bytes = (header + entries.sorted.mkString("", "\n", "\n"))
       .getBytes(UTF_8)
-    val ch = java.nio.channels.FileChannel.open(tmp.toPath,
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.WRITE,
-      java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
-    try { ch.write(java.nio.ByteBuffer.wrap(bytes)); ch.force(true) }
-    finally ch.close()
-    Files.move(tmp.toPath, file.toPath,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    try {
-      val dir = java.nio.channels.FileChannel.open(
-        file.getParentFile.toPath, java.nio.file.StandardOpenOption.READ)
-      try dir.force(true) finally dir.close()
-    } catch { case _: java.io.IOException => () }
+    val out = syncedOutput(tmp.toPath)
+    try out.write(bytes) finally out.close()
+    moveDurably(tmp.toPath, file.toPath, replace = true)
     // Snapshot AFTER the live replace: a crash between the two loses
     // only the snapshot, never the commit.
     maxBatch.foreach { wm =>
@@ -97,6 +88,34 @@ object Manifest {
         new File(file.getParentFile, snapshotName(file.getName, wm)).toPath,
         StandardCopyOption.REPLACE_EXISTING)
     }
+  }
+
+  /** The first half of [[write]]'s durable-replace recipe: a buffered
+    * stream onto `tmp` (created or truncated, parent directories made)
+    * whose `close` fsyncs the bytes before closing the file.
+    */
+  def syncedOutput(tmp: Path): OutputStream = {
+    Option(tmp.getParent).foreach(Files.createDirectories(_))
+    val ch = FileChannel.open(tmp, CREATE, WRITE, TRUNCATE_EXISTING)
+    new BufferedOutputStream(Channels.newOutputStream(ch)) {
+      override def close(): Unit = try { flush(); ch.force(true) } finally super.close()
+    }
+  }
+
+  /** The second half: moves the fsync'd `tmp` to `target` in one atomic
+    * step, then fsyncs the directory (best-effort: not every file system
+    * supports it). `replace = false` publishes with link(2) instead of
+    * rename(2), which refuses an existing `target` atomically with
+    * `java.nio.file.FileAlreadyExistsException` and leaves `tmp` in place.
+    */
+  def moveDurably(tmp: Path, target: Path, replace: Boolean): Unit = {
+    if (replace)
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    else { Files.createLink(target, tmp); Files.delete(tmp) }
+    try {
+      val dir = FileChannel.open(target.toAbsolutePath.getParent, READ)
+      try dir.force(true) finally dir.close()
+    } catch { case _: IOException => () }
   }
 
   /** Add a fully-written entry to the live set (one atomic replace),

@@ -13,9 +13,12 @@ import graft.functions.ConstantRef.constant_ref
   * (`rdd.isEmpty()` :56, `count()` :59, `approxQuantile` :61, `agg(avg)`
   * :62), re-reading the batch each time. Here the count doubles as the
   * empty-batch guard and the quantile sketch is an expression composed into
-  * the same `agg` — one scan, partial aggregation map-side, one shuffle of
-  * sketch-sized state. That shape holds at any scale: the reduced state per
-  * partition is O(sketch), never O(rows).
+  * the same aggregation — one scan, partial state per task. The batch
+  * replays below `agg` it (partial aggregation map-side, one shuffle of
+  * sketch-sized state); the streaming sink observes it on a `noop` write
+  * and merges the task partials on the driver (`MetricsJob.batchMetricsRow`:
+  * one job, no shuffle). Either way the shape holds at any scale: the state
+  * per task is O(sketch), never O(rows).
   */
 object Metrics {
 

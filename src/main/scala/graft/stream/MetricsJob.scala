@@ -1,10 +1,12 @@
 package graft.stream
 
-import java.io.IOException
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.UUID
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.model.{BatchMetrics, Event}
@@ -19,12 +21,13 @@ import graft.ops.Metrics
   * separate per-batch actions (`rdd.isEmpty`, `count`, `approxQuantile`,
   * `agg(avg)`) collapse into ONE aggregation — count doubles as the
   * empty-batch guard and the Greenwald-Khanna sketch rides in the same
-  * `agg`. With AQE that aggregation is 2 Spark jobs (the map stage, then
-  * the result stage), and those are all a non-empty batch runs: the
-  * one-row CSV is written by the sink itself, without a job (measured:
-  * 2 jobs per batch on the paced 7,000 events/s benchmark). Output of
-  * [[writeBatch]] stays at-least-once (non-transactional CSV append),
-  * exactly like the reference (SURVEY §7.4.3).
+  * aggregation. That aggregation is observed metrics on one `noop` write,
+  * so a non-empty batch runs 1 Spark job with no shuffle, and the one-row
+  * CSV is written by the sink itself, without a job (measured: 1 job per
+  * batch on the paced 7,000 events/s benchmark, where the `agg` spelling
+  * ran 2 under AQE). Output of [[writeBatch]] stays at-least-once
+  * (non-transactional CSV append), exactly like the reference
+  * (SURVEY §7.4.3).
   */
 object MetricsJob {
 
@@ -47,11 +50,20 @@ object MetricsJob {
   /** Single-pass per-batch metrics (A6): returns None for an empty batch
     * (P8's guard, folded into the same job). accuracy=100 matches the
     * reference's relativeError=0.01.
+    *
+    * The [[Metrics.metricAggsApprox]] columns are observed on a `noop`
+    * write of the batch: each task folds its rows into sketch-sized
+    * partial state and the driver merges the partials, so the batch is
+    * read by 1 job with no shuffle, no AQE re-plan and no result stage.
+    * When the optimizer drops the observation (a provably empty frame),
+    * Spark completes it with an empty row, which reads as None.
     */
   def batchMetricsRow(batchDf: DataFrame): Option[Row] = {
     val aggs = Metrics.metricAggsApprox(col("latency_ms"))
-    val row = batchDf.agg(aggs.head, aggs.tail: _*).head()
-    if (row.getLong(0) == 0L) None else Some(row)
+    val obs = Observation()
+    batchDf.observe(obs, aggs.head, aggs.tail: _*).write.format("noop").mode("overwrite").save()
+    val row = Await.result(obs.future, Duration.Inf)
+    if (row.length == 0 || row.getLong(0) == 0L) None else Some(row)
   }
 
   private val csvHeader = BatchMetrics.schema.fieldNames.mkString(",")
@@ -60,24 +72,28 @@ object MetricsJob {
     * `dir/name` in the [[BatchMetrics]] layout, with the text Spark's CSV
     * writer produces: a header line, `Long`/`Double.toString` values and
     * `NaN` for a null aggregate (an all-malformed batch). The row is
-    * already collected, so no Spark job runs. The bytes go to a hidden
-    * temp file that is renamed into place, replacing an existing `name`;
-    * readers skip `.`-prefixed files, so an interrupted write leaves
-    * nothing they read.
+    * already collected, so no Spark job runs. The bytes go through the
+    * session's checkpoint file manager (`Sessions`), as an atomic write
+    * that replaces an existing `name`: a hidden temp file renamed into
+    * place, fork-free and fsync'd on a local path. Readers skip
+    * `.`-prefixed files, so an interrupted write leaves nothing they read;
+    * with `sweep`, the hidden temp files such a write left for `name`
+    * are deleted once the new file is in place.
     */
   private def writeMetricsCsv(spark: SparkSession, dir: String, name: String,
-      batchId: Long, r: Row): Unit = {
+      batchId: Long, r: Row, sweep: Boolean): Unit = {
     val epochSec = System.currentTimeMillis() / 1000L
     val aggs = (1 to 4).map(i => if (r.isNullAt(i)) Double.NaN else r.getDouble(i))
     val line = (Seq(batchId, epochSec, r.getLong(0)) ++ aggs).mkString(",")
-    val target = new Path(dir, name)
-    val tmp = new Path(dir, s".$name.tmp")
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(tmp, true)
-    try out.write(s"$csvHeader\n$line\n".getBytes(UTF_8)) finally out.close()
-    // Local file systems rename over an existing file; HDFS-like ones refuse.
-    if (!fs.rename(tmp, target) && !(fs.delete(target, false) && fs.rename(tmp, target)))
-      throw new IOException(s"could not move $tmp to $target")
+    val dirPath = new Path(dir)
+    val fm = CheckpointFileManager.create(dirPath, spark.sessionState.newHadoopConf())
+    val out = fm.createAtomic(new Path(dirPath, name), overwriteIfPossible = true)
+    try out.write(s"$csvHeader\n$line\n".getBytes(UTF_8))
+    catch { case e: Throwable => out.cancel(); throw e }
+    out.close()
+    if (sweep)
+      fm.list(dirPath, (p: Path) => p.getName.startsWith(s".$name.") && p.getName.endsWith(".tmp"))
+        .foreach(f => fm.delete(f.getPath))
   }
 
   /** The foreachBatch sink body (T2+S3): metrics row → a new single-row
@@ -86,7 +102,8 @@ object MetricsJob {
     */
   def writeBatch(spark: SparkSession, outDir: String)(batchDf: DataFrame, batchId: Long): Unit =
     batchMetricsRow(batchDf).foreach { r =>
-      writeMetricsCsv(spark, outDir, s"part-$batchId-${UUID.randomUUID()}.csv", batchId, r)
+      writeMetricsCsv(spark, outDir, s"part-$batchId-${UUID.randomUUID()}.csv", batchId, r,
+        sweep = false)
       // Console progress (S7) — one line per batch, like the reference's print.
       println(s"[metrics] batch=$batchId events=${r.getLong(0)} mean=${r.get(1)} " +
         s"p50=${r.get(2)} p95=${r.get(3)} p99=${r.get(4)}")
@@ -109,7 +126,8 @@ object MetricsJob {
     * attempt at the same batch wrote, so a batch re-processed after
     * checkpoint recovery replaces its own output instead of appending a
     * duplicate — upgrading the reference's at-least-once CSV semantics
-    * (SURVEY §7.4.3) to effectively-once. The file holds the same
+    * (SURVEY §7.4.3) to effectively-once; the replay also deletes the
+    * hidden temp files an interrupted attempt left. The file holds the same
     * [[BatchMetrics]] columns as [[writeBatch]]'s, `batch_id` included, so
     * a recursive scan with the declared schema reads both layouts; with
     * partition discovery `batch_id` comes from the directory name.
@@ -117,7 +135,8 @@ object MetricsJob {
   def writeBatchIdempotent(spark: SparkSession, outDir: String)(
       batchDf: DataFrame, batchId: Long): Unit =
     batchMetricsRow(batchDf).foreach { r =>
-      writeMetricsCsv(spark, s"$outDir/batch_id=$batchId", "part-00000.csv", batchId, r)
+      writeMetricsCsv(spark, s"$outDir/batch_id=$batchId", "part-00000.csv", batchId, r,
+        sweep = true)
     }
 
   /** Kafka producer sink (S2): JSON-serialized frame → topic. Batch
@@ -149,11 +168,19 @@ object MetricsJob {
 
   /** [[start]] with a caller-chosen foreachBatch sink (e.g.
     * [[writeBatchIdempotent]] for effectively-once recovery benchmarks).
+    *
+    * The sink receives each batch as the one column `latency_ms`: a
+    * metrics sink ([[writeBatch]], [[writeBatchIdempotent]] or one built
+    * on [[batchMetricsRow]]) reads nothing else. foreachBatch hands the
+    * sink an already-planned batch, so the optimizer can prune the JSON
+    * parse to `created_ts` only when the projection is here; a sink that
+    * needs the event columns builds its own query from [[parse]].
     */
   def startWith(spark: SparkSession, raw: DataFrame, checkpointDir: String,
       triggerSec: Int, nowMs: Option[Long],
       sink: (DataFrame, Long) => Unit): StreamingQuery =
     withLatency(parse(raw), nowMs)
+      .select("latency_ms")
       .writeStream
       .foreachBatch(sink)
       .option("checkpointLocation", checkpointDir)

@@ -1,14 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.ext.{Dedup, Similarity}
 import graft.ext.TextOps.hashAll
+import graft.ops.Metrics
 
 /** Declarative spellings of operators the engine runs as native codegen
-  * kernels: the executable specs the kernels are proved equal against
-  * (VectorExpressionsSpec, SuffixOpsSpec), and the shapes the DuckDB
-  * oracles mirror. Nothing in the engine calls them.
+  * kernels or in a cheaper physical shape: the executable specs the
+  * engine's spellings are proved equal against (VectorExpressionsSpec,
+  * SuffixOpsSpec, TriggerPathSpec), and the shapes the DuckDB oracles
+  * mirror. Nothing in the engine calls them.
   */
 object DeclarativeTwins {
 
@@ -176,5 +178,15 @@ object DeclarativeTwins {
         sum(when(col("bit") && col("b") >= 32,
           expr("shiftleft(1L, cast(b - 32 as int))")).otherwise(lit(0L)))
           .as("ahash_hi"))
+  }
+
+  /** The `agg` spelling of `MetricsJob.batchMetricsRow`: the same metric
+    * columns as one aggregation, collected with `head()`. Under AQE it runs
+    * 2 Spark jobs (the partial-aggregate map stage, then the result stage).
+    */
+  def batchMetricsRowAgg(batchDf: DataFrame): Option[Row] = {
+    val aggs = Metrics.metricAggsApprox(col("latency_ms"))
+    val row = batchDf.agg(aggs.head, aggs.tail: _*).head()
+    if (row.getLong(0) == 0L) None else Some(row)
   }
 }

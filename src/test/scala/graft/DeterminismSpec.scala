@@ -21,6 +21,7 @@ class DeterminismSpec extends SparkSpec {
   test("catalog results are shuffle-partition-count invariant") {
     val names = SparkEntry.queries.keys.toSeq.sorted
     val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions")
     def runAll(parts: String, confs: (String, String)*): Map[String, Seq[String]] = {
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -32,7 +33,7 @@ class DeterminismSpec extends SparkSpec {
         n -> rows
       }.toMap
       finally {
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
         confs.foreach { case (k, _) => spark.conf.unset(k) }
       }
     }

@@ -5,8 +5,9 @@ import java.io.File
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source lints over `src/main`: every session goes through the one
-  * factory (`Sessions`), engine conf keys stay on a short allow-list,
-  * and a comment that names a spec names one that exists.
+  * factory (`Sessions`), engine conf keys and Hadoop `FileSystem` handles
+  * stay on short allow-lists, and a comment that names a spec names one
+  * that exists.
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -45,6 +46,19 @@ class SourceLintSpec extends AnyFunSuite {
       (l, n) <- lines(f)
       m <- literal.findAllMatchIn(l) if !allowed(m.group(1))
     } yield s"${f.getPath}:$n ${m.group(1)}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("Hadoop FileSystem handles in src/main only on the allow-list") {
+    // Hadoop's local FileSystem forks chmod/readlink processes on writes;
+    // the stream path writes through the checkpoint file manager
+    // (stream/LocalCheckpointFileManager). Tables only stats fixture files.
+    val allowed = Set("Tables.scala")
+    val call = """\bgetFileSystem\(|\bFileSystem\.get\(""".r
+    val offenders = for {
+      f <- scalaFiles("src/main") if !allowed(f.getName)
+      (l, n) <- lines(f) if call.findFirstIn(l).nonEmpty
+    } yield s"${f.getPath}:$n"
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
