@@ -161,14 +161,9 @@ object Bpe {
     * per-doc sequence reassembles with an `array_sort` over
     * (word_pos, sym_pos, id) structs — deterministic order without a
     * global sort (ids ride as comma-joined strings for cross-engine
-    * comparison; a production sink would keep `array<int>`).
-    */
-  def tokenize(docs: DataFrame, idCol: String, textCol: String,
-      merges: Seq[Merge]): DataFrame =
-    tokenizeWith(docs, idCol, textCol, merges, vocab(docs, textCol, merges))
-
-  /** [[tokenize]] with an already-built vocab frame (saves the second
-    * corpus pass when the caller holds training's final vocabulary).
+    * comparison; a production sink would keep `array<int>`). `v` is the
+    * already-built vocab frame, so a caller that holds training's final
+    * vocabulary saves a second corpus pass.
     */
   def tokenizeWith(docs: DataFrame, idCol: String, textCol: String,
       merges: Seq[Merge], v: DataFrame): DataFrame = {

@@ -48,8 +48,8 @@ object Dedup {
   val ShingleA = 1000003L
 
   /** Combined shingle hashes from a pre-staged per-token hash array;
-    * mirrors shingleSet's <n fallback (documents shorter than n words use
-    * their token hashes directly). Routed through the native one-pass
+    * documents shorter than n words fall back to their token hashes
+    * directly. Routed through the native one-pass
     * [[graft.functions.ShingleHashes]] expression — bit-identical to the
     * declarative transform/fold spelling the DuckDB oracles mirror
     * (VectorExpressionsSpec proves it) without its two interpreted HOFs
@@ -128,12 +128,6 @@ object Dedup {
       .where(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
   }
-
-  /** Exact Jaccard similarity of two token-array columns (distinct-set
-    * semantics on both engines: array_intersect/union dedupe).
-    */
-  def jaccard(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
 
   /** Token/shingle set as a SORTED array of portable 32-bit hashes — the
     * staging for [[jaccardHashed]]. Distinct-before-hash keeps the md5

@@ -175,14 +175,4 @@ object QualityModel {
 
   /** Round-half-up to 6 places, matching Spark's `round` and DuckDB. */
   def r6(x: Double): Double = Exact.r6(x)
-
-  /** Mean log-loss of model `m` over the corpus (diagnostic — the
-    * quantity gradient descent minimizes; σ̃ never saturates to 0/1 so
-    * the logs are finite).
-    */
-  def logLoss(docs: DataFrame, m: Model): Double =
-    standardize(features(docs), m.mu, m.sd)
-      .select((-(col("y") * log(sigmoidFast(zOf(m.w)))
-        + (lit(1.0) - col("y")) * log(lit(1.0) - sigmoidFast(zOf(m.w))))).as("l"))
-      .agg(avg(col("l"))).head().getDouble(0)
 }

@@ -399,7 +399,6 @@ object Similarity {
       queryId: Long, numCells: Int, nprobe: Int, m: Int, k: Int, dims: Int,
       topK: Int): DataFrame = {
     require(dims % m == 0, s"dims=$dims must divide into m=$m subspaces")
-    val sub = dims / m
     val assign = ivfAssign(embeddings, idCol, vecCol, numCells)
     val q = broadcast(assign.where(col(idCol) === queryId)
       .select(col("vecd").as("qvec"), col("nrm").as("qnrm")))
@@ -475,14 +474,8 @@ object Similarity {
     // more for the reconstruction-error baseline). The fused per-row
     // frame is CODE-sized (cell + id + m code bytes + one long — no
     // vectors), so pinning it is inside the §8 sketch-frame allowance.
-    val staged =
-      if (encoding == "residual")
-        residuals(embeddings, idCol, vecCol, cents)
-          .select(col("cell"), col(idCol), col("resd").as("_v"))
-      else
-        ivfAssignWith(embeddings, idCol, vecCol, cents)
-          .select(col("cell"), col(idCol), col("vecd").as("_v"))
-    val indexed = codesWithErr(staged, Seq(idCol), book, m)
+    val indexed = codesWithErr(
+      stageForEncode(embeddings, idCol, vecCol, cents, encoding), Seq(idCol), book, m)
       .localCheckpoint(false)
     // codes live in manifest-committed DELTA directories (the inverted
     // index's segment model): the base build is delta "base", appends
@@ -635,14 +628,8 @@ object Similarity {
     // r13: one fused assign+encode pass serves the delta write AND the
     // staleness report (the writeIvfPqIndexWith note) — the pinned
     // frame is code-sized.
-    val staged =
-      if (encoding == "residual")
-        residuals(newVectors, idCol, vecCol, cents)
-          .select(col("cell"), col(idCol), col("resd").as("_v"))
-      else
-        ivfAssignWith(newVectors, idCol, vecCol, cents)
-          .select(col("cell"), col(idCol), col("vecd").as("_v"))
-    val indexed = codesWithErr(staged, Seq(idCol), book, m)
+    val indexed = codesWithErr(
+      stageForEncode(newVectors, idCol, vecCol, cents, encoding), Seq(idCol), book, m)
       .localCheckpoint(false)
     if (!indexed.isEmpty) {
       // delta fully written first, THEN the manifest commit makes it
@@ -1318,20 +1305,20 @@ object Similarity {
     */
   def pqReconErrorWith(embeddings: DataFrame, idCol: String, vecCol: String,
       cents: Book, book: Book, m: Int): DataFrame =
-    reconErrorCore(
-      ivfAssignWith(embeddings, idCol, vecCol, cents)
-        .select(col("cell"), col(idCol), col("vecd").as("_v")), book, m)
+    reconErrorCore(stageForEncode(embeddings, idCol, vecCol, cents, "raw"), book, m)
 
-  /** [[pqReconErrorWith]] for a RESIDUAL-encoded index: quantization SSE
-    * of the residual codes against the residual vectors (the quantity a
-    * residual book actually minimizes — raw recon error would mix in the
-    * centroid displacement the coarse quantizer owns).
+  /** The (cell, id, `_v`) frame a PQ encode reads: each vector's nearest
+    * cell, with `_v` the raw vector for a "raw" index or the residual
+    * from the cell's centroid for a "residual" (IVFADC) one.
     */
-  def pqReconErrorResidualWith(embeddings: DataFrame, idCol: String,
-      vecCol: String, cents: Book, book: Book, m: Int): DataFrame =
-    reconErrorCore(
-      residuals(embeddings, idCol, vecCol, cents)
-        .select(col("cell"), col(idCol), col("resd").as("_v")), book, m)
+  private def stageForEncode(vectors: DataFrame, idCol: String, vecCol: String,
+      cents: Book, encoding: String): DataFrame =
+    if (encoding == "residual")
+      residuals(vectors, idCol, vecCol, cents)
+        .select(col("cell"), col(idCol), col("resd").as("_v"))
+    else
+      ivfAssignWith(vectors, idCol, vecCol, cents)
+        .select(col("cell"), col(idCol), col("vecd").as("_v"))
 
   /** Per-row (…, cell, codes, err_micro) frame: codes and quantization
     * SSE computed in ONE projection over the staged vectors. `keep`

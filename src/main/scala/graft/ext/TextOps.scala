@@ -45,17 +45,6 @@ object TextOps {
     arrays_zip(slice(toks, lit(1), n1), slice(toks, lit(2), n1))
   }
 
-  /** Distinct word n-gram shingle set; documents shorter than n fall back
-    * to their distinct tokens. MinHash over shingles (not unigrams) is what
-    * keeps LSH selective when the corpus vocabulary is small — unigram sets
-    * collide pervasively, shingle sets only for genuine near-dups.
-    */
-  def shingleSet(toks: Column, n: Int): Column = {
-    val shingles = transform(sequence(lit(1), size(toks) - (n - 1)),
-      i => concat_ws(" ", (0 until n).map(o => element_at(toks, i + o)): _*))
-    when(size(toks) < n, array_distinct(toks)).otherwise(array_distinct(shingles))
-  }
-
   /** Canonical text normalization for normalized-exact dedup: lowercase,
     * strip non-alphanumerics, collapse runs of whitespace, trim. Catches
     * trivial near-dups (case/punctuation/spacing variants) before any

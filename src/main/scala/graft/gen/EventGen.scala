@@ -3,6 +3,7 @@ package graft.gen
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Event
+import graft.sources.EventsSource
 
 /** Deterministic reimplementation of the reference producer's event
   * generation rules (producer/producer.py:38-45):
@@ -33,14 +34,12 @@ object EventGen {
       lit(filler).as("payload"))
   }
 
-  /** The same events as JSON strings — the Kafka wire format
-    * (producer.py:21 json.dumps), for driving the streaming pipeline.
+  /** Event rows (batch or stream) as the one JSON string column `value`
+    * — the Kafka wire format (producer.py:21 json.dumps), for driving the
+    * streaming pipeline.
     */
-  def eventsJson(spark: SparkSession, n: Long, rateEps: Double = 1000.0,
-      startMs: Long = 0L, sizeBytes: Int = 200): DataFrame =
-    events(spark, n, rateEps, startMs, sizeBytes)
-      .select(to_json(struct(col("event_id"), col("created_ts"), col("user_id"),
-        col("event_type"), col("value"), col("payload"))).as("value"))
+  def wireJson(events: DataFrame): DataFrame =
+    events.select(to_json(struct(EventsSource.schema.fieldNames.toSeq.map(col): _*)).as("value"))
 
   /** Streaming flavor: the built-in rate source reproduces the producer's
     * rows-per-second contract natively; same field derivation.

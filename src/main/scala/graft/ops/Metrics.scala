@@ -123,17 +123,18 @@ object Metrics {
     * a large cluster where exact percentile would sort each group.
     * accuracy=100 ≈ the reference's relativeError=0.01
     * (spark_stream_metrics.py:61; accuracy = 1/relativeError).
+    *
+    * Columns: `batch_events`, `mean_latency_ms` and `latency_pcts`, the
+    * array [p50, p95, p99] read from ONE sketch per task. The caller
+    * spreads the array: `Dataset.observe` does not merge identical
+    * aggregate expressions as `agg` does, so three `percentile_approx`
+    * columns would build three sketches.
     */
   def metricAggsApprox(lat: Column, accuracy: Int = 100): Seq[Column] = Seq(
     count(lit(1)).as("batch_events"),
     avg(lat).as("mean_latency_ms"),
-    // cast: percentile_approx of an integral column yields integral values
-    element_at(percentile_approx(lat, array(lit(0.5), lit(0.95), lit(0.99)), lit(accuracy)), 1)
-      .cast("double").as("p50_latency_ms"),
-    element_at(percentile_approx(lat, array(lit(0.5), lit(0.95), lit(0.99)), lit(accuracy)), 2)
-      .cast("double").as("p95_latency_ms"),
-    element_at(percentile_approx(lat, array(lit(0.5), lit(0.95), lit(0.99)), lit(accuracy)), 3)
-      .cast("double").as("p99_latency_ms"))
+    percentile_approx(lat, array(lit(0.5), lit(0.95), lit(0.99)), lit(accuracy))
+      .as("latency_pcts"))
 
   /** Global single-pass metrics record over an event frame — the A6
     * composite (spark_stream_metrics.py:59-68) as one job.

@@ -18,10 +18,10 @@ import org.apache.spark.sql.functions._
   *    the first sighting are dropped; a re-arrival after eviction is
   *    treated as new (exactly the contract for replay/retry dedup, where
   *    duplicates cluster within the delivery window).
-  *  - [[exactForever]] (`dropDuplicates`) keeps every key seen — exact
-  *    across the whole stream but state grows with distinct keys; only
-  *    for bounded key universes (it exists for parity with batch-exact
-  *    semantics and is the correct tool behind a compacted key space).
+  *  - Spark's own `dropDuplicates` keeps every key seen — exact across
+  *    the whole stream but state grows with distinct keys; only for
+  *    bounded key universes (parity with batch-exact semantics, the
+  *    correct tool behind a compacted key space).
   */
 object DedupStream {
 
@@ -32,10 +32,6 @@ object DedupStream {
       delay: String): DataFrame =
     events.withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
-
-  /** Unbounded-state exact streaming dedup (bounded key universes only). */
-  def exactForever(events: DataFrame, keyCols: Seq[String]): DataFrame =
-    events.dropDuplicates(keyCols.head, keyCols.tail: _*)
 
   /** Content dedup for a document stream: key = md5 of the canonicalized
     * text (the native `normalize_text`, same canonical form as the batch

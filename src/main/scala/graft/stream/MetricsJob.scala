@@ -53,17 +53,23 @@ object MetricsJob {
     *
     * The [[Metrics.metricAggsApprox]] columns are observed on a `noop`
     * write of the batch: each task folds its rows into sketch-sized
-    * partial state and the driver merges the partials, so the batch is
-    * read by 1 job with no shuffle, no AQE re-plan and no result stage.
-    * When the optimizer drops the observation (a provably empty frame),
-    * Spark completes it with an empty row, which reads as None.
+    * partial state (one percentile sketch) and the driver merges the
+    * partials, so the batch is read by 1 job with no shuffle, no AQE
+    * re-plan and no result stage. The returned row is (batch_events,
+    * mean, p50, p95, p99): the percentile array is spread here, as
+    * doubles. When the optimizer drops the observation (a provably empty
+    * frame), Spark completes it with an empty row, which reads as None.
     */
   def batchMetricsRow(batchDf: DataFrame): Option[Row] = {
     val aggs = Metrics.metricAggsApprox(col("latency_ms"))
     val obs = Observation()
     batchDf.observe(obs, aggs.head, aggs.tail: _*).write.format("noop").mode("overwrite").save()
     val row = Await.result(obs.future, Duration.Inf)
-    if (row.length == 0 || row.getLong(0) == 0L) None else Some(row)
+    if (row.length == 0 || row.getLong(0) == 0L) None
+    else {
+      val pcts = if (row.isNullAt(2)) Seq.fill(3)(null) else row.getSeq[Number](2).map(_.doubleValue)
+      Some(Row.fromSeq(Seq(row.get(0), row.get(1)) ++ pcts))
+    }
   }
 
   private val csvHeader = BatchMetrics.schema.fieldNames.mkString(",")
@@ -151,23 +157,12 @@ object MetricsJob {
       .save()
 
   /** Wire any value-column streaming frame through the full pipeline
-    * (T1-T5): parse → latency → foreachBatch metrics/CSV, with checkpoint
-    * and processing-time trigger. `idempotentSink=false` (default) is the
-    * reference's at-least-once CSV append; `true` swaps in
-    * [[writeBatchIdempotent]] for effectively-once output across
-    * checkpoint recovery (a replayed batch replaces its own
-    * `batch_id=N/part-00000.csv` instead of appending a duplicate row).
-    */
-  def start(spark: SparkSession, raw: DataFrame, outDir: String,
-      checkpointDir: String, triggerSec: Int = 5,
-      nowMs: Option[Long] = None,
-      idempotentSink: Boolean = false): StreamingQuery =
-    startWith(spark, raw, checkpointDir, triggerSec, nowMs,
-      if (idempotentSink) writeBatchIdempotent(spark, outDir)
-      else writeBatch(spark, outDir))
-
-  /** [[start]] with a caller-chosen foreachBatch sink (e.g.
-    * [[writeBatchIdempotent]] for effectively-once recovery benchmarks).
+    * (T1-T5): parse → latency → foreachBatch `sink`, with checkpoint and
+    * processing-time trigger. The sink is [[writeBatch]] for the
+    * reference's at-least-once CSV append, or [[writeBatchIdempotent]] for
+    * effectively-once output across checkpoint recovery (a replayed batch
+    * replaces its own `batch_id=N/part-00000.csv` instead of appending a
+    * duplicate row).
     *
     * The sink receives each batch as the one column `latency_ms`: a
     * metrics sink ([[writeBatch]], [[writeBatchIdempotent]] or one built
@@ -186,25 +181,6 @@ object MetricsJob {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(s"$triggerSec seconds"))
       .start()
-
-  /** Stream-static enrichment join: the streaming frame joins a static
-    * dimension (e.g. a user/account table) — Spark re-plans the static
-    * side per micro-batch, broadcasting it when small. The standard
-    * "enrich events before aggregation" shape.
-    */
-  def enrich(parsed: DataFrame, dim: DataFrame, key: String): DataFrame =
-    parsed.join(dim, Seq(key), "left")
-
-  /** Streaming deduplication bounded by watermark: duplicates of the same
-    * event id arriving within the watermark horizon are dropped; state is
-    * purged as the watermark advances, so it stays bounded on an unbounded
-    * stream. Pipeline-schema spelling of [[DedupStream.withinWatermark]]
-    * (eviction/re-admission semantics proven in DedupStreamSpec).
-    */
-  def dedupEvents(parsed: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    DedupStream.withinWatermark(
-      parsed.withColumn("event_time", timestamp_millis(col("created_ts"))),
-      Seq("event_id"), "event_time", watermark)
 
   /** Stream-stream interval join — the remaining §2.6 "absent feature":
     * correlate two event streams on a key within a bounded event-time

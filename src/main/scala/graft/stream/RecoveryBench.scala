@@ -43,12 +43,10 @@ object RecoveryBench {
     val outDir = Files.createTempDirectory("recovery_out").toString
     val ckpt = Files.createTempDirectory("recovery_ckpt").toString
 
-    def wire = (if (source == "graft-events")
+    def wire = EventGen.wireJson(if (source == "graft-events")
         spark.readStream.format("graft-events")
           .option("rateEps", rate).option("numPartitions", cores).load()
       else EventGen.eventStream(spark, rate))
-      .select(to_json(struct(col("event_id"), col("created_ts"), col("user_id"),
-        col("event_type"), col("value"), col("payload"))).as("value"))
 
     // Phase 1: steady state until the "crash".
     val q1 = MetricsJob.startWith(spark, wire, ckpt, triggerSec, None,
@@ -81,9 +79,8 @@ object RecoveryBench {
     Thread.sleep(2L * triggerSec * 1000L)
     q2.stop()
 
-    val m = spark.read.option("header", "true")
-      .option("basePath", outDir).csv(outDir)
-    val ids = m.select(col("batch_id").cast("long")).distinct()
+    val m = graft.analysis.Analysis.readMetricsCsv(spark, outDir)
+    val ids = m.select(col("batch_id")).distinct()
       .orderBy("batch_id").collect().map(_.getLong(0))
     // Integrity: every batch the ENGINE saw input rows for must have
     // exactly one output row. Empty batches (first trigger after an epoch
@@ -91,7 +88,7 @@ object RecoveryBench {
     // empty-batch guard — so a raw batch-id-sequence gap is not a hole.
     val progress = progress1 ++ q2.recentProgress.map(p => p.batchId -> p.numInputRows)
     val missing = progress.collect { case (id, n) if n > 0 => id }.toSet -- ids.toSet
-    val events = m.agg(sum(col("batch_events").cast("long"))).head().getLong(0)
+    val events = m.agg(sum(col("batch_events"))).head().getLong(0)
 
     println(s"""{"metric":"recovery","source":"$source","rate_eps":$rate,"run_sec":$runSec,"cores":$cores,""" +
       s""""stop_ms":$stopMs,"restart_to_first_recovered_batch_ms":$firstBatchMs,""" +

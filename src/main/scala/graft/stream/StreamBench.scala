@@ -30,23 +30,20 @@ object StreamBench {
 
     // Producer wire format: the generated stream serialized to JSON, so the
     // benchmark pays the same parse cost as the Kafka path.
-    val wire = (if (source == "graft-events")
+    val wire = EventGen.wireJson(if (source == "graft-events")
         spark.readStream.format("graft-events")
           .option("rateEps", rate).option("numPartitions", cores)
           // anchor the pacing schedule at now so created_ts is a real
           // event time and the measured latency is meaningful
           .option("startMs", System.currentTimeMillis()).load()
       else EventGen.eventStream(spark, rate))
-      .select(to_json(struct(col("event_id"), col("created_ts"), col("user_id"),
-        col("event_type"), col("value"), col("payload"))).as("value"))
 
-    val q = MetricsJob.start(spark, wire, outDir, ckpt, triggerSec)
+    val q = MetricsJob.startWith(spark, wire, ckpt, triggerSec, None,
+      MetricsJob.writeBatch(spark, outDir))
     Thread.sleep(seconds * 1000L)
     q.stop()
 
-    val m = spark.read.option("header", "true")
-      .schema(graft.model.BatchMetrics.schema).csv(outDir)
-    val row = m.agg(
+    val row = graft.analysis.Analysis.readMetricsCsv(spark, outDir).agg(
       sum(col("batch_events")).as("events"),
       count(lit(1)).as("batches"),
       avg(col("batch_events") / triggerSec).as("mean_eps"),

@@ -15,8 +15,8 @@ import graft.ext.TextOps
   * the batch query can only say so after the fact.
   *
   * Shape: explode tokens → stateful streaming distinct on the type
-  * (`dropDuplicates` — the [[DedupStream.exactForever]] state shape:
-  * one state row per DISTINCT TYPE, which under a Heaps'-law corpus
+  * (`dropDuplicates`, the unbounded-key state shape `DedupStream` warns
+  * about: one state row per DISTINCT TYPE, which under a Heaps'-law corpus
   * grows sublinearly in the stream — the rare case where
   * unbounded-key state is the CORRECT tool, because the key universe
   * is the vocabulary, not the event stream). Downstream, a

@@ -50,47 +50,6 @@ object SkewProbe {
     Files.createFile(Paths.get(s"$out/_DONE"))
   }
 
-  /** Relational hot-JOIN-key corpus (mode "join"): at FACTOR×, HALF of
-    * all orders belong to ONE customer and HALF of all lineitems point at
-    * ONE order — far beyond any natural TPC-H skew. Exercises the claims
-    * on the join family's three defenses: `ops/Salt.saltedJoin` (explicit
-    * fact-side salting), AQE's runtime skew-join split (sort-merge /
-    * shuffled-hash paths), and the TopKPerKey heap (one giant group must
-    * fold through per-partition partial heaps, not one task's sort).
-    * Non-hot keys stay copy-strided so per-copy structure matches sf0.1.
-    */
-  def buildJoin(spark: SparkSession, base: String, out: String, factor: Int): Unit = {
-    if (Files.exists(Paths.get(s"$out/_DONE"))) return
-    val KeyStride = 1000000000L
-    val hotCust = 0L  // fixture keys are 0-based BIGINTs; copy 0 keeps them
-    val hotOrder = 0L
-    (0 until factor).map { i =>
-      Tables.orders(spark, base)
-        .withColumn("o_custkey",
-          when(pmod(col("o_orderkey"), lit(2)) === 0, lit(hotCust))
-            .otherwise(col("o_custkey") + lit(i * SmallStride)))
-        .withColumn("o_orderkey", col("o_orderkey") + lit(i * KeyStride))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$out/orders.parquet")
-    (0 until factor).map { i =>
-      Tables.lineitem(spark, base)
-        .withColumn("l_orderkey",
-          when(pmod(col("l_orderkey") + col("l_linenumber"), lit(2)) === 0, lit(hotOrder))
-            .otherwise(col("l_orderkey") + lit(i * KeyStride)))
-        .withColumn("l_partkey", col("l_partkey") + lit(i * SmallStride))
-        .withColumn("l_suppkey", col("l_suppkey") + lit(i * SmallStride))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
-    (0 until factor).map { i =>
-      Tables.customer(spark, base)
-        .withColumn("c_custkey", col("c_custkey") + lit(i * SmallStride))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$out/customer.parquet")
-    for (t <- Seq("part", "supplier", "nation", "region"))
-      Tables.table(spark, base, t).write.mode("overwrite").parquet(s"$out/$t.parquet")
-    Files.createFile(Paths.get(s"$out/_DONE"))
-  }
-
   /** (stageId → (durationsMs, shuffleReadBytes)) for tasks since clear(). */
   private class SkewListener extends SparkListener {
     val stages = mutable.Map.empty[Int, (mutable.ArrayBuffer[Long], mutable.ArrayBuffer[Long])]

@@ -61,10 +61,11 @@ class BpeSpec extends SparkSpec {
     val d = docs("low lower")
     val merges = Bpe.trainMerges(d, "text", steps = 1)
     assert(merges.map(m => (m.l_sym, m.r_sym)) == Seq(("l", "o")))
-    val v = Bpe.vocab(d, "text", merges)
+    val vocab = Bpe.vocab(d, "text", merges)
+    val v = vocab
       .as[(Int, String, Long)].collect().map(r => r._2 -> (r._1, r._3)).toMap
     assert(v == Map("lo" -> (0, 2L), "w" -> (1, 2L), "e" -> (2, 1L), "r" -> (3, 1L)))
-    val ids = Bpe.tokenize(d, "doc_id", "text", merges)
+    val ids = Bpe.tokenizeWith(d, "doc_id", "text", merges, vocab)
       .as[(Long, String)].collect().toMap
     assert(ids == Map(0L -> "0,1,0,1,2,3"))
   }

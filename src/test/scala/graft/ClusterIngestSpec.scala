@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -99,7 +97,6 @@ class ClusterIngestSpec extends SparkSpec {
   test("streaming clusterIngest equals the batch pipeline over the stream") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val dir = graft.TempStores.newStorePath("clusterstore").toFile.getAbsolutePath
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[(Long, String)](spark)
     val q = graft.stream.DedupStream
       .clusterIngest(ms.toDF().toDF("doc_id", "text"), dir)

@@ -9,7 +9,6 @@ import graft.queries.ExtensionQueries
   * values is the DuckDB oracle's job, at all three SFs).
   */
 class ComposedSpec extends SparkSpec {
-  import spark.implicits._
 
   private lazy val rows =
     ExtensionQueries.queries("pipeline_training_corpus_v2")(spark, sf0001)

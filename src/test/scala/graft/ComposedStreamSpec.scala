@@ -166,7 +166,6 @@ class ComposedStreamSpec extends SparkSpec {
     assert(batches.forall(_.nonEmpty))
 
     val store = TempStores.newStorePath("composed_store").toFile.getAbsolutePath
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(Long, String, String, Long)](spark)
     val src = input.toDF().toDF("doc_id", "lang", "text", "ts_ms")
       .withColumn("ts", timestamp_millis(col("ts_ms")))

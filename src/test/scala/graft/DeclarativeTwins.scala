@@ -181,12 +181,22 @@ object DeclarativeTwins {
   }
 
   /** The `agg` spelling of `MetricsJob.batchMetricsRow`: the same metric
-    * columns as one aggregation, collected with `head()`. Under AQE it runs
-    * 2 Spark jobs (the partial-aggregate map stage, then the result stage).
+    * columns as one aggregation, the percentile array spread into three
+    * double columns (`agg` merges the three identical sketches into one),
+    * collected with `head()`. Under AQE it runs 2 Spark jobs (the
+    * partial-aggregate map stage, then the result stage).
     */
   def batchMetricsRowAgg(batchDf: DataFrame): Option[Row] = {
-    val aggs = Metrics.metricAggsApprox(col("latency_ms"))
+    val Seq(n, mean, pcts) = Metrics.metricAggsApprox(col("latency_ms"))
+    val aggs = Seq(n, mean) ++ (1 to 3).map(i => element_at(pcts, i).cast("double"))
     val row = batchDf.agg(aggs.head, aggs.tail: _*).head()
     if (row.getLong(0) == 0L) None else Some(row)
   }
+
+  /** Exact Jaccard similarity of two token-array columns (distinct-set
+    * semantics on both engines: array_intersect/union dedupe); the
+    * engine's spelling is `Dedup.jaccardHashed` over hashed token sets.
+    */
+  def jaccard(a: Column, b: Column): Column =
+    size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
 }

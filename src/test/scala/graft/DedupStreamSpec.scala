@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.stream.DedupStream
@@ -62,9 +61,9 @@ class DedupStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("exactForever keeps dropping duplicates regardless of event time") {
+  test("dropDuplicates keeps dropping duplicates regardless of event time") {
     val input = MemoryStream[Long](spark)
-    val q = startQuery(DedupStream.exactForever(input.toDF().toDF("id"), Seq("id")),
+    val q = startQuery(input.toDF().toDF("id").dropDuplicates("id"),
       "dedup_ex")
     try {
       input.addData(1L, 2L, 1L)

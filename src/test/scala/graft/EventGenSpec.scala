@@ -39,7 +39,7 @@ class EventGenSpec extends SparkSpec {
   }
 
   test("generated JSON round-trips through the streaming parse stage") {
-    val parsed = graft.stream.MetricsJob.parse(EventGen.eventsJson(spark, 100))
+    val parsed = graft.stream.MetricsJob.parse(EventGen.wireJson(EventGen.events(spark, 100)))
       .as[Event].collect()
     assert(parsed.length == 100)
     assert(parsed.map(_.user_id.toInt).toSeq == (0 until 100))

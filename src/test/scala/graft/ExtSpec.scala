@@ -42,7 +42,7 @@ class ExtSpec extends SparkSpec {
     val t = docs.select($"doc_id", array_distinct(TextOps.tokens($"text")).as("toks"))
     val pairs = t.as("a").join(t.as("b"), $"a.doc_id" < $"b.doc_id")
       .select($"a.doc_id", $"b.doc_id",
-        Dedup.jaccard($"a.toks", $"b.toks").as("jac"))
+        DeclarativeTwins.jaccard($"a.toks", $"b.toks").as("jac"))
       .as[(Long, Long, Double)].collect()
       .map { case (a, b, j) => (a, b) -> j }.toMap
     assert(pairs((1L, 2L)) == 1.0)
@@ -287,7 +287,6 @@ class ExtSpec extends SparkSpec {
     val media = Multimodal.withBinaryPayload(docs, "doc_id", "text")
     val frames = Multimodal.sampleFrames(spark, media, frameBytes = 8, stride = 2)
       .collect().filter(_.doc_id == 1L).sortBy(_.frame_ix)
-    val textLen = "the quick brown fox jumps over the lazy dog".length // 43
     assert(frames.map(_.frame_ix).toSeq == Seq(0, 2, 4)) // ceil(43/8)=6 chunks, every 2nd
     assert(frames.forall(f => f.offset == f.frame_ix.toLong * 8))
     assert(frames.take(2).forall(_.n_bytes == 8))

@@ -40,8 +40,8 @@ class KafkaIntegrationSpec extends SparkSpec {
     // pre-created topic both work; partition count is broker-side config.
     val n = 500L
     MetricsJob.publishKafka(
-      graft.gen.EventGen.eventsJson(spark, n, rateEps = 1000.0,
-        startMs = System.currentTimeMillis() - 10000L),
+      graft.gen.EventGen.wireJson(graft.gen.EventGen.events(spark, n, rateEps = 1000.0,
+        startMs = System.currentTimeMillis() - 10000L)),
       broker, topic)
 
     // S1 + T4: subscribe from EARLIEST (deterministic on a fresh topic)

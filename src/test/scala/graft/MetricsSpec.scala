@@ -39,19 +39,19 @@ class MetricsSpec extends SparkSpec {
   test("approx percentiles land within the sketch's relative error of exact") {
     val ev = Metrics.withLatency(Tables.events(spark, sf0001), col("ts"),
       Some(1706745600000L))
-    val approxAggs = Metrics.metricAggsApprox(col("latency_ms")) // accuracy=100
+    // (batch_events, mean, p50, p95, p99) from the accuracy=100 sketch
+    val a = graft.stream.MetricsJob.batchMetricsRow(ev).get
     val exactAggs = Metrics.metricAggsExact(col("latency_ms"))
-    val a = ev.agg(approxAggs.head, approxAggs.tail: _*).head()
     val e = ev.agg(exactAggs.head, exactAggs.tail: _*).head()
       .getValuesMap[Long](Seq("p50_latency_ms_x100", "p95_latency_ms_x100", "p99_latency_ms_x100"))
       .map { case (k, v) => k.stripSuffix("_x100") -> v / 100.0 }
     // GK sketch guarantees rank error <= 1/accuracy; translate to a loose
     // value tolerance via the observed spread.
     val spread = e("p99_latency_ms") - e("p50_latency_ms")
-    Seq("p50_latency_ms", "p95_latency_ms", "p99_latency_ms").foreach { c =>
-      val diff = math.abs(a.getAs[Double](c) - e(c))
+    Seq("p50_latency_ms" -> 2, "p95_latency_ms" -> 3, "p99_latency_ms" -> 4).foreach { case (c, i) =>
+      val diff = math.abs(a.getDouble(i) - e(c))
       assert(diff <= math.max(spread * 0.05, 1000.0),
-        s"$c approx=${a.getAs[Double](c)} exact=${e(c)}")
+        s"$c approx=${a.getDouble(i)} exact=${e(c)}")
     }
   }
 

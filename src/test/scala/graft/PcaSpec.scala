@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.ext.Pca
 
 /** Power-iteration PCA (`ext/Pca`): determinism, unit norm, Rayleigh

@@ -11,6 +11,17 @@ class QualityModelSpec extends SparkSpec {
 
   private lazy val docs = graft.Tables.documents(spark, sf0001)
 
+  /** Mean log-loss of model `m` over the corpus — the quantity gradient
+    * descent minimizes; σ̃ never saturates to 0/1 so the logs are finite.
+    */
+  private def logLoss(m: QualityModel.Model): Double = {
+    val p = QualityModel.sigmoidFast(lit(m.w(0)) + lit(m.w(1)) * col("x1") +
+      lit(m.w(2)) * col("x2") + lit(m.w(3)) * col("x3"))
+    QualityModel.standardize(QualityModel.features(docs), m.mu, m.sd)
+      .select((-(col("y") * log(p) + (lit(1.0) - col("y")) * log(lit(1.0) - p))).as("l"))
+      .agg(avg(col("l"))).head().getDouble(0)
+  }
+
   test("training is bit-deterministic across runs") {
     val m1 = QualityModel.train(docs)
     val m2 = QualityModel.train(docs)
@@ -22,8 +33,8 @@ class QualityModelSpec extends SparkSpec {
   test("training reduces log-loss below the zero-weight baseline (ln 2)") {
     val m = QualityModel.train(docs)
     val zero = QualityModel.Model(Array(0.0, 0.0, 0.0, 0.0), m.mu, m.sd)
-    val l0 = QualityModel.logLoss(docs, zero)
-    val lT = QualityModel.logLoss(docs, m)
+    val l0 = logLoss(zero)
+    val lT = logLoss(m)
     assert(math.abs(l0 - math.log(2.0)) < 1e-12) // σ̃(0) = 0.5 exactly
     assert(lT < l0, s"trained loss $lT should beat baseline $l0")
   }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.{AsOfJoin, Scd}
-import org.apache.spark.sql.functions._
 
 class ScdSpec extends SparkSpec {
   import spark.implicits._

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -151,7 +149,6 @@ class ScdStoreSpec extends SparkSpec {
   test("streaming dimIngest equals the one-shot build over the stream") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val dir = graft.TempStores.newStorePath("scdstore").toFile.getAbsolutePath
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[(String, Long, Long, String)](spark)
     val q = graft.stream.ScdStream
       .dimIngest(ms.toDF().toDF("k", "t", "tb", "a"), dir, "k", "t", "tb", "a")

@@ -90,7 +90,7 @@ class SketchSpec extends SparkSpec {
     val sk = graft.ext.Sketches.kllSketches(
       ev, Seq(col("event_type")), col("value"))
     val merged = graft.ext.Sketches.kllRollup(sk, Nil, Seq(0.5, 0.95)).head()
-    for (((q, got), i) <- Seq(0.5 -> merged.getDouble(0), 0.95 -> merged.getDouble(1)).zipWithIndex) {
+    for ((q, got) <- Seq(0.5 -> merged.getDouble(0), 0.95 -> merged.getDouble(1))) {
       val rank = values.count(_ <= got).toDouble / values.length
       assert(math.abs(rank - q) <= 0.03, s"q=$q est=$got rank=$rank")
     }

@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source lints over `src/main`: every session goes through the one
   * factory (`Sessions`), engine conf keys and Hadoop `FileSystem` handles
-  * stay on short allow-lists, and a comment that names a spec names one
-  * that exists.
+  * stay on short allow-lists, a comment that names a spec names one that
+  * exists, and every public def has a production caller or is on the
+  * named engine surface list.
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -81,5 +82,180 @@ class SourceLintSpec extends AnyFunSuite {
       m <- named.findAllIn(comment) if !defined(m) && !spark(m)
     } yield s"${f.getPath}:$n names $m"
     assert(missing.isEmpty, missing.mkString("\n"))
+  }
+
+  /** `src` with every comment blanked (line breaks kept, so line numbers
+    * hold); string and character literals are kept as written.
+    */
+  private def stripComments(src: String): String = {
+    val out = new StringBuilder
+    val n = src.length
+    var i = 0
+    def copyTo(j: Int): Unit = { out ++= src.substring(i, j); i = j }
+    while (i < n) {
+      if (src.startsWith("\"\"\"", i)) {
+        var j = src.indexOf("\"\"\"", i + 3)
+        j = if (j < 0) n else j + 3
+        while (j < n && src(j) == '"') j += 1
+        copyTo(j)
+      } else if (src(i) == '"') {
+        var j = i + 1
+        while (j < n && src(j) != '"' && src(j) != '\n') j += (if (src(j) == '\\') 2 else 1)
+        copyTo(math.min(j + 1, n))
+      } else if (src(i) == '\'' && i + 2 < n && src(i + 2) == '\'') copyTo(i + 3)
+      else if (src.startsWith("'\\", i) && i + 3 < n && src(i + 3) == '\'') copyTo(i + 4)
+      else if (src.startsWith("//", i)) {
+        val j = src.indexOf('\n', i)
+        i = if (j < 0) n else j
+      } else if (src.startsWith("/*", i)) {
+        val e = src.indexOf("*/", i + 2)
+        val j = if (e < 0) n else e + 2
+        out ++= "\n" * src.substring(i, j).count(_ == '\n')
+        i = j
+      } else copyTo(i + 1)
+    }
+    out.toString
+  }
+
+  private def codeLines(f: File): Vector[String] = {
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    try stripComments(src.mkString).split("\n", -1).toVector
+    finally src.close()
+  }
+
+  private val identifier = """[A-Za-z_][A-Za-z0-9_]*""".r
+  private val defLine = """^(\s*)((?:@?\w+(?:\[\w+\])?\s+)*)def\s+([A-Za-z_]\w*)""".r
+
+  /** (file, 1-based line, `FileStem.name`) of each public, non-`override`
+    * def in `src/main` with no caller outside its own definition. Callers
+    * are counted by name, with comments stripped, in `src/main` and in
+    * the benchmark harness (`perfbench/src`). A definition spans its
+    * `def` line and the lines indented deeper below it, plus a closing
+    * bracket at its own indent, so recursion is not a caller.
+    */
+  private def uncalledPublicDefs(): Seq[(File, Int, String)] = {
+    val main = scalaFiles("src/main")
+    val code = (main ++ scalaFiles("perfbench/src")).map(f => f -> codeLines(f)).toMap
+    val uses = code.values.flatten.flatMap(identifier.findAllIn).toSeq
+      .groupMapReduce(identity)(_ => 1)(_ + _)
+    def indent(l: String) = l.length - l.dropWhile(_ == ' ').length
+    for {
+      f <- main
+      ls = code(f)
+      (l, i) <- ls.zipWithIndex
+      m <- defLine.findPrefixMatchOf(l).toSeq
+      mods = m.group(2).split("\\s+").toSet
+      if !mods.exists(x => x.startsWith("private") || x.startsWith("protected") || x == "override")
+      name = m.group(3)
+      k = m.group(1).length
+      body = ls.drop(i + 1).takeWhile(x => x.trim.isEmpty || indent(x) > k)
+      closing = ls.lift(i + 1 + body.length)
+        .filter(x => indent(x) == k && (x.trim.startsWith("}") || x.trim.startsWith(")")))
+      span = (l +: body) ++ closing
+      inside = span.flatMap(identifier.findAllIn).count(_ == name)
+      if uses.getOrElse(name, 0) == inside
+    } yield (f, i + 1, s"${f.getName.stripSuffix(".scala")}.$name")
+  }
+
+  /** Public defs kept with no production caller: the engine surface a
+    * deployment calls directly. Each entry names the capability it
+    * implements (a phrase of README.md or SURVEY.md) and the spec under
+    * `src/test/scala/graft` that exercises it.
+    */
+  private val engineSurface: Map[String, (String, String)] = Map(
+    // Kafka glue: the reference's source and producer sink
+    "MetricsJob.kafkaSource" -> ("S1 Kafka source", "KafkaIntegrationSpec"),
+    "MetricsJob.publishKafka" -> ("S2 Kafka sink", "KafkaIntegrationSpec"),
+    // streaming operators beyond the reference's one job
+    "MetricsJob.correlate" -> ("stream-stream interval join", "StreamingSpec"),
+    "MetricsJob.windowedCounts" -> ("event-time windows + watermark", "StreamingSpec"),
+    "MetricsJob.sessionCounts" -> ("native streaming session windows", "StreamingSpec"),
+    "MetricsJob.windowedDistinctUsers" -> ("streaming windowed distinct (HLL)", "StreamingSpec"),
+    "MetricsJob.windowedKeyFreq" ->
+      ("streaming windowed key-frequency (count-min)", "StreamingSpec"),
+    "MetricsJob.windowedLatencyQuantiles" ->
+      ("streaming windowed quantiles (KLL, r8)", "StreamingSpec"),
+    "DedupStream.withinWatermark" -> ("streaming dedup (watermark-bounded)", "DedupStreamSpec"),
+    "DedupStream.byContent" -> ("streaming dedup (watermark-bounded)", "DedupStreamSpec"),
+    "DedupStream.clusterIngest" ->
+      ("incremental cluster maintenance (r8 wave 4)", "ClusterIngestSpec"),
+    "Sessionize.streamTypeCounts" -> ("transformWithState MapState", "SessionizeSpec"),
+    "CusumStream.streamOrdered" -> ("out-of-order-safe CUSUM", "SessionizeSpec"),
+    "ScdStream.dimIngest" -> ("incremental SCD2 maintenance", "ScdStoreSpec"),
+    "VocabGrowth.firstSightings" ->
+      ("the ingest-time twin of the heaps curve", "VocabGrowthSpec"),
+    "ModelServing.scoreStream" ->
+      ("Batch-train → stream-serve for every trained model", "ModelServingSpec"),
+    "ModelServing.tokenizeStream" ->
+      ("Batch-train → stream-serve for every trained model", "ModelServingSpec"),
+    "ModelServing.windowedFeatureBins" ->
+      ("Batch-train → stream-serve for every trained model", "ModelServingSpec"),
+    "ModelServing.unigramStream" ->
+      ("Batch-train → stream-serve for every trained model", "UnigramSpec"),
+    "QualityGate.freeze" -> ("the percolation twin of the cleaning", "QualityGateSpec"),
+    "QualityGate.freezeThresholds" -> ("the percolation twin of the cleaning", "QualityGateSpec"),
+    "QualityGate.gate" -> ("the percolation twin of the cleaning", "QualityGateSpec"),
+    // sketches
+    "Sketches.groupSketches" -> ("mergeable sketch suite (r6)", "SketchSpec"),
+    "Sketches.thetaSketches" -> ("mergeable sketch suite (r6)", "SketchSpec"),
+    "Sketches.thetaSetOps" -> ("mergeable sketch suite (r6)", "SketchSpec"),
+    "Sketches.kllSketches" -> ("mergeable sketch suite (r6)", "SketchSpec"),
+    "Sketches.kllRollup" -> ("mergeable sketch suite (r6)", "SketchSpec"),
+    "Sketches.topkAccumulate" -> ("mergeable sketch suite (r6)", "SketchSpec"),
+    "Sketches.topkCombine" -> ("mergeable sketch suite (r6)", "SketchSpec"),
+    // multimodal operators
+    "Multimodal.decodeImages" -> ("REAL image codec (r5)", "SourcesSpec"),
+    "Multimodal.resizeImages" -> ("REAL image codec (r5)", "SourcesSpec"),
+    "Multimodal.decodeAudio" -> ("REAL audio codec (r5)", "SourcesSpec"),
+    "Multimodal.audioFingerprint" -> ("audio fingerprint dedup (r8)", "SourcesSpec"),
+    "Multimodal.imageNearDupPairs" -> ("perceptual image dedup (r8)", "SourcesSpec"),
+    "Multimodal.decodeVideoFrames" -> ("MP4/H.264 absent in the JDK", "SourcesSpec"),
+    "Multimodal.videoNearDupPairs" -> ("MP4/H.264 absent in the JDK", "VideoDedupSpec"),
+    // dedup and retrieval
+    "Dedup.minhashCandidates" -> ("MinHash + LSH", "ExtSpec"),
+    "Dedup.ingestDedupBatch" -> ("incremental dedup ingest (r8)", "ExtSpec"),
+    "Retrieval.phraseMatchesFromIndex" -> ("phrase retrieval (r8)", "RetrievalSpec"),
+    "Retrieval.phraseCount" -> ("phrase retrieval (r8)", "RetrievalSpec"),
+    "Retrieval.frozenStats" -> ("percolation (r8)", "RetrievalSpec"),
+    "Retrieval.percolate" -> ("percolation (r8)", "RetrievalSpec"),
+    "Layout.writeZOrdered" -> ("Z-order layout", "LayoutSpec"),
+    // store reads and maintenance (time travel, quarantine, vacuum, retrain)
+    "Dedup.readClusterLabelsAt" -> ("store time travel", "ClusterIngestSpec"),
+    "ScdStore.readDimAt" -> ("store time travel", "ScdStoreSpec"),
+    "ScdStore.readQuarantine" ->
+      ("per-key high-water marks quarantine late arrivals", "ScdStoreSpec"),
+    "Dedup.vacuumClusterStore" ->
+      ("incremental cluster maintenance (r8 wave 4)", "ClusterIngestSpec"),
+    "Similarity.vacuumCodes" -> ("The vector index shares the commit-point design", "LayoutSpec"),
+    "Similarity.refreshIfStale" -> ("ANN retrain-under-ingest closed", "LayoutSpec"),
+  )
+
+  test("every public def in src/main has a caller or is on the engine surface list") {
+    val offenders = uncalledPublicDefs().collect {
+      case (f, n, key) if !engineSurface.contains(key) =>
+        s"${f.getPath}:$n $key has no caller in src/main or perfbench/src"
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("every engine surface entry is uncalled, documented and exercised by its spec") {
+    def squash(t: String) = t.replaceAll("\\s+", " ")
+    val docs = Seq("README.md", "SURVEY.md").map { p =>
+      val src = scala.io.Source.fromFile(p, "UTF-8")
+      try squash(src.mkString) finally src.close()
+    }
+    val uncalled = uncalledPublicDefs().map(_._3).toSet
+    val problems = engineSurface.toSeq.sortBy(_._1).flatMap { case (key, (capability, spec)) =>
+      val name = key.substring(key.indexOf('.') + 1)
+      val specFile = new File(s"src/test/scala/graft/$spec.scala")
+      Seq(
+        Option.when(!uncalled(key))(s"$key is not an uncalled public def in src/main"),
+        Option.when(!docs.exists(_.contains(squash(capability))))(
+          s"$key: '$capability' is in neither README.md nor SURVEY.md"),
+        Option.when(!specFile.isFile ||
+            !codeLines(specFile).exists(l => identifier.findAllIn(l).contains(name)))(
+          s"$key: $spec does not call $name")).flatten
+    }
+    assert(problems.isEmpty, problems.mkString("\n"))
   }
 }

@@ -343,7 +343,7 @@ class StreamingSpec extends SparkSpec {
   test("stream-static enrichment join attaches dimension columns per batch") {
     val input = MemoryStream[String](spark)
     val dim = Seq((1, "gold"), (2, "basic")).toDF("user_id", "tier")
-    val q = MetricsJob.enrich(MetricsJob.parse(input.toDF()), dim, "user_id")
+    val q = MetricsJob.parse(input.toDF()).join(dim, Seq("user_id"), "left")
       .writeStream.outputMode("append").format("memory").queryName("enriched").start()
     try {
       input.addData(jsonEvent("a", 1000L),
@@ -358,7 +358,9 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming dedup within watermark drops repeated event ids") {
     val input = MemoryStream[String](spark)
-    val q = MetricsJob.dedupEvents(MetricsJob.parse(input.toDF()))
+    val q = graft.stream.DedupStream.withinWatermark(
+        MetricsJob.parse(input.toDF()).withColumn("event_time", timestamp_millis($"created_ts")),
+        Seq("event_id"), "event_time", "10 minutes")
       .writeStream.outputMode("append").format("memory").queryName("deduped").start()
     try {
       input.addData(jsonEvent("a", 1000L), jsonEvent("a", 1000L), jsonEvent("b", 2000L))
@@ -494,14 +496,14 @@ class StreamingSpec extends SparkSpec {
     // restart path (same checkpoint across two query lifetimes), plus the
     // worst at-least-once window: a crash AFTER the sink wrote but BEFORE
     // the checkpoint committed, simulated by re-invoking the sink with an
-    // already-written batch id. With idempotentSink=true every batch id
+    // already-written batch id. With writeBatchIdempotent every batch id
     // must own exactly one row no matter how often it replays.
     val input = MemoryStream[String](spark)
     val outDir = graft.TempStores.newStorePath("metrics_idem2").toString
     val ckpt = graft.TempStores.newStorePath("ckpt_idem2").toString
     def run(data: Seq[String]): Unit = {
-      val q = MetricsJob.start(spark, input.toDF(), outDir, ckpt,
-        triggerSec = 1, nowMs = Some(100000L), idempotentSink = true)
+      val q = MetricsJob.startWith(spark, input.toDF(), ckpt, triggerSec = 1,
+        nowMs = Some(100000L), MetricsJob.writeBatchIdempotent(spark, outDir))
       try { if (data.nonEmpty) input.addData(data: _*); q.processAllAvailable() }
       finally q.stop()
     }

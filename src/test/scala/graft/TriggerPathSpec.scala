@@ -11,9 +11,12 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.aggregate.ApproximatePercentile
+import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.stream.{LocalCheckpointFileManager, MetricsJob}
 
 /** The per-trigger path of the metrics pipeline: the Spark jobs a batch
@@ -29,7 +32,7 @@ class TriggerPathSpec extends SparkSpec {
   private def latencies(values: Seq[String]): DataFrame =
     MetricsJob.withLatency(MetricsJob.parse(values.toDF("value")), Some(100000L))
 
-  test("a MetricsJob.start stream runs 1 Spark job per non-empty batch") {
+  test("a MetricsJob.startWith stream runs 1 Spark job per non-empty batch") {
     val jobs = new ConcurrentHashMap[Long, AtomicInteger]()
     @volatile var runId = ""
     val listener = new SparkListener {
@@ -42,9 +45,9 @@ class TriggerPathSpec extends SparkSpec {
       }
     }
     val input = MemoryStream[String](spark)
-    val q = MetricsJob.start(spark, input.toDF(),
-      TempStores.newStorePath("jobs_out").toString, TempStores.newStorePath("jobs_ckpt").toString,
-      triggerSec = 1, nowMs = Some(100000L), idempotentSink = true)
+    val q = MetricsJob.startWith(spark, input.toDF(), TempStores.newStorePath("jobs_ckpt").toString,
+      triggerSec = 1, nowMs = Some(100000L),
+      MetricsJob.writeBatchIdempotent(spark, TempStores.newStorePath("jobs_out").toString))
     runId = q.runId.toString
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -78,6 +81,25 @@ class TriggerPathSpec extends SparkSpec {
     assert(m.getLong(0) == 2L && (1 to 4).forall(m.isNullAt), m)
     assert(bounded(MetricsJob.batchMetricsRow(provablyEmpty)).isEmpty)
     assert(bounded(MetricsJob.batchMetricsRow(emptyAtRuntime)).isEmpty)
+  }
+
+  test("batchMetricsRow observes one percentile sketch") {
+    val observed = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.optimizedPlan.foreach { case c: CollectMetrics => observed.add(c); case _ => () }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(MetricsJob.batchMetricsRow(latencies(Seq(jsonEvent("a", 40000L)))).isDefined)
+      val deadline = System.currentTimeMillis() + 20000L
+      while (observed.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    val sketches = observed.asScala.toSeq.flatMap(_.expressions.flatMap(_.collect {
+      case a: ApproximatePercentile => a
+    }))
+    assert(observed.size == 1 && sketches.size == 1, observed.asScala.mkString("\n"))
   }
 
   test("the session's checkpoint file manager keeps Spark's atomic-write contract") {

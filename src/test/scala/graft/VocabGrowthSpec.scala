@@ -20,7 +20,6 @@ class VocabGrowthSpec extends SparkSpec {
       docs.filter(_._1 < 167L),
       docs.filter(d => d._1 >= 167L && d._1 < 334L),
       docs.filter(_._1 >= 334L))
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(Long, String)](spark)
     val q = VocabGrowth.firstSightings(
         input.toDF().toDF("doc_id", "text"), "text")
