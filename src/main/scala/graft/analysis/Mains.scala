@@ -26,7 +26,7 @@ object Exp1Main {
       .where(col("rate_eps_input").isNotNull)
     val summary = Analysis.exp1Summary(labeled, "rate_eps_input", warmup, measure, trigger)
     Analysis.writeSummaryCsv(summary, out)
-    // S6 plot sinks: the reference's two exp1 matplotlib figures, as SVG
+    // S6 plot sinks: the reference's two exp1 matplotlib figures, as PNG
     Plot.exp1Figures(summary, out).foreach(p => println(s"Saved plot: $p"))
     summary.show(100, truncate = false)
     spark.stop()
@@ -51,7 +51,7 @@ object Exp2Main {
     val summary = Analysis.exp1Summary(labeled, "configuration",
       warmupSec = 120L, measureSec = 10L * 365 * 24 * 3600, triggerSec = 5)
     Analysis.writeSummaryCsv(summary, out)
-    // S6 plot sink: the reference's exp2 bar figure, as SVG
+    // S6 plot sink: the reference's exp2 bar figure, as PNG
     println(s"Saved plot: ${Plot.exp2Figure(summary, out)}")
     summary.show(100, truncate = false)
     spark.stop()

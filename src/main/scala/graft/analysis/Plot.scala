@@ -3,10 +3,11 @@ package graft.analysis
 import java.nio.file.{Files, Paths}
 
 /** S6 plot sinks: the reference renders its experiment figures with
-  * matplotlib (results/exp1/analysis/analyze_exp1.py:114-135,
-  * exp2/analysis/analyze_exp2.py:53-61). The engine emits the same
-  * figures as self-contained SVG — hand-built markup, no plotting
-  * library, nothing outside the JDK — so a paper-reproducer gets
+  * matplotlib and saves them as PNG (results/exp1/analysis/
+  * analyze_exp1.py:114-135, exp2/analysis/analyze_exp2.py:53-61). The
+  * engine draws the same figures as PNG with the JDK alone — rasterized
+  * by java.awt Graphics2D, encoded by javax.imageio, headless
+  * (BufferedImage needs no display toolkit) — so a paper-reproducer gets
   * viewable artifacts straight from the analysis CLIs. Summaries are one
   * row per run configuration, so plotting is inherently driver-side; the
   * heavy lifting (the summary aggregation) stays distributed upstream.
@@ -17,9 +18,6 @@ object Plot {
   private val H = 420
   // plot box margins: left, right, top, bottom
   private val ML = 84; private val MR = 24; private val MT = 48; private val MB = 64
-
-  private def esc(s: String): String =
-    s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
   private def fmt(v: Double): String =
     if (v == v.floor && math.abs(v) < 1e15) v.toLong.toString
@@ -39,99 +37,6 @@ object Plot {
     val first = math.ceil(lo / step) * step
     Iterator.iterate(first)(_ + step).takeWhile(_ <= hi + step * 1e-9).toSeq
   }
-
-  private def header(title: String): String =
-    s"""<svg xmlns="http://www.w3.org/2000/svg" width="$W" height="$H" viewBox="0 0 $W $H">
-       |<rect width="$W" height="$H" fill="white"/>
-       |<text x="${W / 2}" y="24" text-anchor="middle" font-family="sans-serif" font-size="15" font-weight="bold">${esc(title)}</text>""".stripMargin
-
-  private def axes(xlabel: String, ylabel: String): String =
-    s"""<line x1="$ML" y1="${H - MB}" x2="${W - MR}" y2="${H - MB}" stroke="black"/>
-       |<line x1="$ML" y1="$MT" x2="$ML" y2="${H - MB}" stroke="black"/>
-       |<text x="${(ML + W - MR) / 2}" y="${H - 14}" text-anchor="middle" font-family="sans-serif" font-size="12">${esc(xlabel)}</text>
-       |<text x="18" y="${(MT + H - MB) / 2}" text-anchor="middle" font-family="sans-serif" font-size="12" transform="rotate(-90 18 ${(MT + H - MB) / 2})">${esc(ylabel)}</text>""".stripMargin
-
-  /** Line plot with circular markers — the exp1 figure shape
-    * (throughput / p95-latency vs input rate).
-    */
-  def lineSvg(points: Seq[(Double, Double)], title: String,
-      xlabel: String, ylabel: String): String = {
-    require(points.nonEmpty, "no points to plot")
-    val sorted = points.sortBy(_._1)
-    val (xs, ys) = (sorted.map(_._1), sorted.map(_._2))
-    val (xLo, xHi) = (xs.min, xs.max)
-    val (yLoRaw, yHi) = (math.min(ys.min, 0.0), ys.max)
-    val yLo = yLoRaw
-    def px(x: Double) = ML + (if (xHi > xLo) (x - xLo) / (xHi - xLo) else 0.5) * (W - ML - MR)
-    def py(y: Double) = (H - MB) - (if (yHi > yLo) (y - yLo) / (yHi - yLo) else 0.5) * (H - MT - MB)
-    val grid = new StringBuilder
-    for (t <- ticks(yLo, yHi)) {
-      val y = py(t)
-      grid ++= s"""<line x1="$ML" y1="$y" x2="${W - MR}" y2="$y" stroke="#cccccc" stroke-dasharray="4 3" stroke-width="0.5"/>
-                  |<text x="${ML - 8}" y="${y + 4}" text-anchor="end" font-family="sans-serif" font-size="11">${fmt(t)}</text>
-                  |""".stripMargin
-    }
-    for (t <- ticks(xLo, xHi)) {
-      val x = px(t)
-      grid ++= s"""<line x1="$x" y1="${H - MB}" x2="$x" y2="${H - MB + 5}" stroke="black"/>
-                  |<text x="$x" y="${H - MB + 20}" text-anchor="middle" font-family="sans-serif" font-size="11">${fmt(t)}</text>
-                  |""".stripMargin
-    }
-    val poly = sorted.map { case (x, y) => s"${px(x)},${py(y)}" }.mkString(" ")
-    val markers = sorted.map { case (x, y) =>
-      s"""<circle cx="${px(x)}" cy="${py(y)}" r="4" fill="#1f77b4"/>"""
-    }.mkString("\n")
-    s"""${header(title)}
-       |$grid${axes(xlabel, ylabel)}
-       |<polyline points="$poly" fill="none" stroke="#1f77b4" stroke-width="2"/>
-       |$markers
-       |</svg>""".stripMargin
-  }
-
-  /** Labeled bar chart — the exp2 figure shape (p95 latency by
-    * configuration).
-    */
-  def barSvg(bars: Seq[(String, Double)], title: String, ylabel: String): String = {
-    require(bars.nonEmpty, "no bars to plot")
-    val yHi = math.max(bars.map(_._2).max, 0.0)
-    val yLo = math.min(bars.map(_._2).min, 0.0)
-    def py(y: Double) = (H - MB) - (if (yHi > yLo) (y - yLo) / (yHi - yLo) else 0.5) * (H - MT - MB)
-    val n = bars.size
-    val slot = (W - ML - MR).toDouble / n
-    val bw = slot * 0.6
-    val grid = new StringBuilder
-    for (t <- ticks(yLo, yHi)) {
-      val y = py(t)
-      grid ++= s"""<line x1="$ML" y1="$y" x2="${W - MR}" y2="$y" stroke="#cccccc" stroke-dasharray="4 3" stroke-width="0.5"/>
-                  |<text x="${ML - 8}" y="${y + 4}" text-anchor="end" font-family="sans-serif" font-size="11">${fmt(t)}</text>
-                  |""".stripMargin
-    }
-    val rects = bars.zipWithIndex.map { case ((label, v), i) =>
-      val x = ML + slot * i + (slot - bw) / 2
-      val yTop = py(math.max(v, 0.0))
-      val h = math.abs(py(0.0) - py(v))
-      val cx = ML + slot * i + slot / 2
-      s"""<rect x="$x" y="$yTop" width="$bw" height="$h" fill="#1f77b4"/>
-         |<text x="$cx" y="${H - MB + 18}" text-anchor="middle" font-family="sans-serif" font-size="11" transform="rotate(20 $cx ${H - MB + 18})">${esc(label)}</text>""".stripMargin
-    }.mkString("\n")
-    s"""${header(title)}
-       |$grid${axes("", ylabel)}
-       |$rects
-       |</svg>""".stripMargin
-  }
-
-  def write(path: String, svg: String): Unit = {
-    val p = Paths.get(path)
-    Option(p.getParent).foreach(Files.createDirectories(_))
-    Files.writeString(p, svg)
-  }
-
-  // ---- PNG backend (matplotlib-parity: the reference writes PNG —
-  // analyze_exp1.py:123, analyze_exp2.py:61). Same figures, same
-  // geometry helpers, rasterized with JDK-public java.awt Graphics2D
-  // and encoded by javax.imageio — nothing outside the JDK, headless
-  // (BufferedImage needs no display toolkit; the codec path is the one
-  // ext/Multimodal already exercises).
 
   private val Blue = new java.awt.Color(0x1f, 0x77, 0xb4)
   private val GridGray = new java.awt.Color(0xcc, 0xcc, 0xcc)
@@ -192,7 +97,9 @@ object Plot {
     }
   }
 
-  /** PNG twin of [[lineSvg]] — identical layout arithmetic. */
+  /** Line plot with circular markers — the exp1 figure shape
+    * (throughput / p95-latency vs input rate).
+    */
   def linePng(points: Seq[(Double, Double)], title: String,
       xlabel: String, ylabel: String): java.awt.image.BufferedImage = {
     require(points.nonEmpty, "no points to plot")
@@ -224,7 +131,9 @@ object Plot {
     }
   }
 
-  /** PNG twin of [[barSvg]] — identical layout arithmetic. */
+  /** Labeled bar chart — the exp2 figure shape (p95 latency by
+    * configuration).
+    */
   def barPng(bars: Seq[(String, Double)], title: String, ylabel: String)
       : java.awt.image.BufferedImage = {
     require(bars.nonEmpty, "no bars to plot")
@@ -271,24 +180,15 @@ object Plot {
       .collect()
       .map(r => (r.get(0).toString.toDouble, r.getDouble(1), r.getDouble(2)))
       .sortBy(_._1)
-    val p1 = s"$outDir/throughput_vs_rate.svg"
-    write(p1, lineSvg(rows.map(r => (r._1, r._2)).toSeq,
+    val p1 = s"$outDir/throughput_vs_rate.png"
+    writePng(p1, linePng(rows.map(r => (r._1, r._2)).toSeq,
       "Experiment 1: Throughput vs Input Rate",
       "Input rate (events/sec)", "Mean throughput (events/sec)"))
-    val p2 = s"$outDir/p95_latency_vs_rate.svg"
-    write(p2, lineSvg(rows.map(r => (r._1, r._3)).toSeq,
+    val p2 = s"$outDir/p95_latency_vs_rate.png"
+    writePng(p2, linePng(rows.map(r => (r._1, r._3)).toSeq,
       "Experiment 1: p95 Latency vs Input Rate",
       "Input rate (events/sec)", "Average p95 end-to-end latency (ms)"))
-    // matplotlib parity: the reference saves these two figures as PNG
-    val g1 = s"$outDir/throughput_vs_rate.png"
-    writePng(g1, linePng(rows.map(r => (r._1, r._2)).toSeq,
-      "Experiment 1: Throughput vs Input Rate",
-      "Input rate (events/sec)", "Mean throughput (events/sec)"))
-    val g2 = s"$outDir/p95_latency_vs_rate.png"
-    writePng(g2, linePng(rows.map(r => (r._1, r._3)).toSeq,
-      "Experiment 1: p95 Latency vs Input Rate",
-      "Input rate (events/sec)", "Average p95 end-to-end latency (ms)"))
-    Seq(p1, p2, g1, g2)
+    Seq(p1, p2)
   }
 
   /** The exp2 figure (analyze_exp2.py:53-61): p95 latency by labeled
@@ -298,12 +198,8 @@ object Plot {
       labelCol: String = "configuration"): String = {
     val rows = summary.select(labelCol, "mean_p95_latency_ms").collect()
       .map(r => (r.getString(0), r.getDouble(1))).toSeq
-    val p = s"$outDir/exp2_p95_latency.svg"
-    write(p, barSvg(rows,
-      "Experiment 2: Effect of Partitions and Parallelism",
-      "Average p95 latency (ms)"))
-    // matplotlib parity: the reference saves the figure as PNG
-    writePng(s"$outDir/exp2_p95_latency.png", barPng(rows,
+    val p = s"$outDir/exp2_p95_latency.png"
+    writePng(p, barPng(rows,
       "Experiment 2: Effect of Partitions and Parallelism",
       "Average p95 latency (ms)"))
     p

@@ -233,68 +233,61 @@ object Retrieval {
   // ---------------------------------------------------------------------
 
   /** Write one immutable index segment for `docs` under
-    * `path/segments/<name>`.
+    * `path/segments/<name>` and commit it through the index manifest
+    * ([[Manifest.ingest]]): with a `watermark` the segment is that
+    * streaming batch's commit (a replayed batch id writes nothing), and
+    * empty `docs` commit no segment — a zero-row postings dir would break
+    * the df read-back's schema inference and add a useless per-query
+    * segment scan.
     */
   def writeIndexSegment(docs: DataFrame, path: String, name: String,
       buckets0: Int = IndexBuckets, watermark: Option[Long] = None): Unit = {
     val spark = docs.sparkSession
     val seg = s"$path/segments/$name"
-    // Adopt a manifest BEFORE this segment's directory exists: on a
-    // fresh (or legacy) index, deferring adoption to commit time would
-    // let a crashed half-written segment be promoted to live by the
-    // NEXT successful commit's directory-listing adoption. Eager
-    // adoption pins the baseline to what was fully written before us.
-    if (!manifestFile(path).exists())
-      writeManifest(path, listSegmentDirs(path))
-    // One tokenCount pass shared by the dlen join and the meta write
-    // (doc-count-sized checkpoint, §8 rule).
+    // One tokenCount pass shared by the emptiness check, the dlen join
+    // and the meta write (doc-count-sized checkpoint, §8 rule).
     val dlens = docLengths(docs).localCheckpoint(false)
-    // buckets = 0 opts into the scale-adaptive count; an index with
-    // LIVE segments pins the count they already agreed on (segMetas
-    // fails loudly on disagreement), a fresh index derives it from this
-    // batch's doc count.
-    val buckets =
-      if (buckets0 > 0) buckets0
-      else {
-        val live = readManifest(path).getOrElse(Seq.empty)
-          .filter(s => new java.io.File(s"$path/segments/$s").isDirectory)
-        if (live.nonEmpty) segMetas(spark, path, live)._1
+    Manifest.ingest(manifestFile(path), watermark, dlens.isEmpty) { live =>
+      // buckets = 0 opts into the scale-adaptive count; an index with
+      // LIVE segments pins the count they already agreed on (segMetas
+      // fails loudly on disagreement), a fresh index derives it from
+      // this batch's doc count.
+      val buckets =
+        if (buckets0 > 0) buckets0
+        else if (live.nonEmpty) segMetas(spark, path, live)._1
         else adaptiveBuckets(dlens.count())
-      }
-    // POSITIONAL postings: token positions ride per (term, doc) row so
-    // the same segment serves phrase queries (positions intersect) —
-    // scoring reads never pay for them (parquet column pruning drops
-    // the positions column from BM25 scans). tf = positions length.
-    val posed = docs.select(col("doc_id"),
-      posexplode(TextOps.tokens(col("text"))).as(Seq("pos", "term")))
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"),
-        sort_array(collect_list(col("pos"))).as("positions"))
-    val withBucket = posed
-      .join(dlens, Seq("doc_id"))
-      .withColumn("bucket",
-        pmod(graft.ext.TextOps.hash32(col("term")), lit(buckets.toLong)))
-    Layout.writePartitioned(
-      withBucket.select("bucket", "term", "doc_id", "tf", "dlen", "positions"),
-      s"$seg/postings", Seq("bucket"), sortCols = Seq("term", "doc_id"))
-    // df = posting rows per term (one row per (doc, term)); bucket is a
-    // function of term, so grouping by both is the per-term count. It
-    // derives from the postings JUST WRITTEN (a 2-column pruned parquet
-    // read), not from `withBucket`: each write is its own action, and a
-    // second action over withBucket would re-run the whole
-    // tokenize+explode+aggregate on the corpus.
-    Layout.writePartitioned(
-      spark.read.parquet(s"$seg/postings")
-        .groupBy("bucket", "term").agg(count(lit(1)).as("df")),
-      s"$seg/df", Seq("bucket"), sortCols = Seq("term"))
-    dlens
-      .agg(count(lit(1)).as("n_docs"), sum(col("dlen")).as("sum_dlen"))
-      .withColumn("buckets", lit(buckets))
-      .write.mode("overwrite").parquet(s"$seg/meta")
-    // COMMIT POINT: the segment becomes live only when the manifest
-    // names it — a crash anywhere above leaves the previous manifest
-    // (and thus the served index) untouched.
-    commitSegment(path, name, watermark)
+      // POSITIONAL postings: token positions ride per (term, doc) row so
+      // the same segment serves phrase queries (positions intersect) —
+      // scoring reads never pay for them (parquet column pruning drops
+      // the positions column from BM25 scans). tf = positions length.
+      val posed = docs.select(col("doc_id"),
+        posexplode(TextOps.tokens(col("text"))).as(Seq("pos", "term")))
+        .groupBy(col("doc_id"), col("term"))
+        .agg(count(lit(1)).as("tf"),
+          sort_array(collect_list(col("pos"))).as("positions"))
+      val withBucket = posed
+        .join(dlens, Seq("doc_id"))
+        .withColumn("bucket",
+          pmod(graft.ext.TextOps.hash32(col("term")), lit(buckets.toLong)))
+      Layout.writePartitioned(
+        withBucket.select("bucket", "term", "doc_id", "tf", "dlen", "positions"),
+        s"$seg/postings", Seq("bucket"), sortCols = Seq("term", "doc_id"))
+      // df = posting rows per term (one row per (doc, term)); bucket is a
+      // function of term, so grouping by both is the per-term count. It
+      // derives from the postings JUST WRITTEN (a 2-column pruned parquet
+      // read), not from `withBucket`: each write is its own action, and a
+      // second action over withBucket would re-run the whole
+      // tokenize+explode+aggregate on the corpus.
+      Layout.writePartitioned(
+        spark.read.parquet(s"$seg/postings")
+          .groupBy("bucket", "term").agg(count(lit(1)).as("df")),
+        s"$seg/df", Seq("bucket"), sortCols = Seq("term"))
+      dlens
+        .agg(count(lit(1)).as("n_docs"), sum(col("dlen")).as("sum_dlen"))
+        .withColumn("buckets", lit(buckets))
+        .write.mode("overwrite").parquet(s"$seg/meta")
+      live :+ name
+    }
   }
 
   /** STREAMING ingest into the segmented index: each micro-batch becomes
@@ -320,16 +313,13 @@ object Retrieval {
 
   /** One streaming ingest step (the [[ingestStream]] foreachBatch body,
     * exposed for direct testing and for callers with their own batch
-    * loop). Effectively-once across ALL crash windows:
-    *
-    *  - the manifest carries a BATCH WATERMARK (`#maxBatch=`) updated in
-    *    the same atomic replace that commits the segment, so a replayed
-    *    batch id ≤ watermark is a NO-OP — including after a compaction
-    *    has folded the batch's segment name away (name-existence alone
-    *    cannot detect that replay, and re-ingesting would double-count
-    *    every document of the batch);
-    *  - a crash between data-write and commit leaves the previous
-    *    manifest serving; the replayed batch rewrites the orphan.
+    * loop): the batch becomes segment `b<batchId>` through the index's
+    * commit step ([[Manifest.ingest]]), so a replayed batch id is a
+    * NO-OP — including after a compaction has folded the batch's segment
+    * name away (name-existence alone cannot detect that replay, and
+    * re-ingesting would double-count every document of the batch) — and
+    * a crash between data-write and commit leaves the previous manifest
+    * serving while the replayed batch rewrites the orphan.
     *
     * With `maxSegments` > 0, any commit that leaves more than that many
     * live segments triggers a compaction (named after the triggering
@@ -341,82 +331,48 @@ object Retrieval {
     */
   def ingestBatch(batch: DataFrame, batchId: Long, path: String,
       buckets: Int = IndexBuckets, maxSegments: Int = 0): Unit = {
-    val replay =
-      readManifestData(path).flatMap(_.maxBatch).exists(batchId <= _)
-    if (!replay) {
-      // empty triggers commit no segment: a zero-row postings dir would
-      // break the df read-back's schema inference and add a useless
-      // per-query segment scan
-      if (batch.isEmpty) return
-      writeIndexSegment(batch, path, f"b$batchId%09d", buckets,
-        watermark = Some(batchId))
-    }
+    writeIndexSegment(batch, path, f"b$batchId%09d", buckets,
+      watermark = Some(batchId))
     // The compaction check runs on the REPLAY path too: a crash between
     // a batch's segment commit and its triggered compaction would
     // otherwise never be retried (the replayed batch no-ops at the
     // watermark), leaving the index over the bound until the next
     // non-empty batch — indefinitely on a paused stream. Re-running
     // compaction for the same batch overwrites its own staged name.
-    if (maxSegments > 0 && readManifest(path).exists(_.size > maxSegments))
+    if (maxSegments > 0 && liveSegments(path).size > maxSegments)
       compactSegments(batch.sparkSession, path, f"c$batchId%09d")
   }
 
   // -------------------------------------------------------------------
-  // Segment manifest — the index's COMMIT POINT (the Lucene segments_N
-  // model). The LIVE segment set is what the manifest file says, never
-  // what the directory happens to contain: every mutation (ingest,
+  // Segment manifest — the index's COMMIT POINT ([[Manifest]], the
+  // Lucene segments_N model). The LIVE segment set is what the manifest
+  // file says, never what the directory happens to contain, and an index
+  // with no manifest has no segments: every mutation (ingest,
   // compaction) prepares its data under segments/ first and then
   // atomically replaces the manifest, so a crash at ANY point leaves the
   // previously-committed view serving — at worst with orphan
-  // directories that [[vacuumSegments]] garbage-collects. Indexes
-  // written before the manifest existed fall back to a directory
-  // listing and adopt a manifest on their next mutation.
+  // directories that [[vacuumSegments]] garbage-collects.
   // -------------------------------------------------------------------
 
   private def manifestFile(path: String): java.io.File =
     new java.io.File(s"$path/segments.manifest")
 
-  private def readManifestData(path: String): Option[Manifest.State] =
-    Manifest.read(manifestFile(path))
-
-  private def readManifest(path: String): Option[Seq[String]] =
-    readManifestData(path).map(_.entries)
-
-  private def writeManifest(path: String, segs: Seq[String],
-      maxBatch: Option[Long] = None): Unit =
-    Manifest.write(manifestFile(path), segs, maxBatch)
-
-  /** Add a fully-written segment to the live set (one atomic manifest
-    * replace), advancing the batch watermark when the segment came from
-    * a streaming batch. A pre-manifest index adopts its current
-    * directory listing as the baseline live set.
-    */
-  private def commitSegment(path: String, name: String,
-      watermark: Option[Long]): Unit =
-    Manifest.commit(manifestFile(path), name, watermark,
-      adopt = listSegmentDirs(path))
-
-  /** What physically exists on disk — NOT authority on liveness. */
-  private def listSegmentDirs(path: String): Seq[String] = {
-    val dir = new java.io.File(s"$path/segments")
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory).map(_.getName).sorted.toSeq
-  }
+  private def liveSegments(path: String): Seq[String] =
+    Manifest.read(manifestFile(path)).fold(Seq.empty[String])(_.entries)
 
   /** Delete segment directories the manifest does not reference — the
     * garbage a crash between data-write and manifest-commit (or between
-    * commit and cleanup) leaves behind. No-op on a pre-manifest index:
-    * without a manifest there is no authority to call a directory dead.
+    * commit and cleanup) leaves behind.
     */
   def vacuumSegments(path: String): Unit =
     Manifest.vacuum(manifestFile(path), new java.io.File(s"$path/segments"))
 
-  /** The LIVE segments: the manifest's list (each entry required to
-    * exist), or the directory listing for pre-manifest indexes.
+  /** The LIVE segments to serve: the manifest's list, each entry
+    * required to exist.
     */
   private def listSegments(path: String): Seq[String] = {
-    val segs = readManifest(path).getOrElse(listSegmentDirs(path))
-    require(segs.nonEmpty, s"no index segments under $path/segments")
+    val segs = liveSegments(path)
+    require(segs.nonEmpty, s"no committed index segments under $path")
     segs.foreach(s => require(
       new java.io.File(s"$path/segments/$s").isDirectory,
       s"manifest lists segment '$s' but $path/segments/$s is missing"))
@@ -585,26 +541,25 @@ object Retrieval {
     val segs = listSegments(path)
     require(!segs.contains(compactedName),
       s"segment name '$compactedName' already exists under $path")
-    // A pre-manifest index adopts its directory listing NOW, so the
-    // staged directory below is invisible to serving even if we crash.
-    if (readManifest(path).isEmpty) writeManifest(path, segs)
     val (buckets, _) = segMetas(spark, path, segs)
     def union(sub: String) = segs.map(s =>
       spark.read.parquet(s"$path/segments/$s/$sub")).reduce(_ unionByName _)
     val staged = s"$path/segments/$compactedName"
-    Layout.writePartitioned(union("postings"), s"$staged/postings",
-      Seq("bucket"), sortCols = Seq("term", "doc_id"))
-    Layout.writePartitioned(
-      union("df").groupBy("bucket", "term").agg(sum(col("df")).as("df")),
-      s"$staged/df", Seq("bucket"), sortCols = Seq("term"))
-    union("meta")
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dlen")).as("sum_dlen"))
-      .withColumn("buckets", lit(buckets))
-      .write.mode("overwrite").parquet(s"$staged/meta")
-    // COMMIT POINT — the batch watermark survives compaction (it is the
-    // only remaining record that the folded segments' batches happened)
-    writeManifest(path, Seq(compactedName),
-      readManifestData(path).flatMap(_.maxBatch))
+    // COMMIT POINT — a maintenance commit: the batch watermark survives
+    // compaction (it is the only remaining record that the folded
+    // segments' batches happened)
+    Manifest.ingest(manifestFile(path), batchId = None) { _ =>
+      Layout.writePartitioned(union("postings"), s"$staged/postings",
+        Seq("bucket"), sortCols = Seq("term", "doc_id"))
+      Layout.writePartitioned(
+        union("df").groupBy("bucket", "term").agg(sum(col("df")).as("df")),
+        s"$staged/df", Seq("bucket"), sortCols = Seq("term"))
+      union("meta")
+        .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dlen")).as("sum_dlen"))
+        .withColumn("buckets", lit(buckets))
+        .write.mode("overwrite").parquet(s"$staged/meta")
+      Seq(compactedName)
+    }
     // pure cleanup — re-runnable, crash leaves only unreferenced dirs
     vacuumSegments(path)
   }

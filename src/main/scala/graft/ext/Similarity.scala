@@ -429,9 +429,11 @@ object Similarity {
 
   /** Materialize the IVF-PQ index to disk: `(id, codes)` rows PARTITIONED
     * BY CELL (one directory per Voronoi cell, in-file sorted by id via
-    * `ops/Layout.writePartitioned`), plus the centroid and codebook side
-    * tables serving needs. This is what turns IVF pruning from a compute
-    * bound into an I/O bound: [[ivfPqTopKFromIndex]] reads ONLY the
+    * `ops/Layout.writePartitioned`) in a manifest-committed codes
+    * directory (`base` on a fresh path, a new generation over a live
+    * index), plus the centroid and codebook side tables serving needs.
+    * This is what turns IVF pruning from a compute bound into an I/O
+    * bound: [[ivfPqTopKFromIndex]] reads ONLY the
     * `nprobe` probed partitions — at 10^9 vectors the other
     * numCells − nprobe directories are never opened, and each row read
     * is m code bytes, not D floats.
@@ -478,15 +480,23 @@ object Similarity {
       stageForEncode(embeddings, idCol, vecCol, cents, encoding), Seq(idCol), book, m)
       .localCheckpoint(false)
     // codes live in manifest-committed DELTA directories (the inverted
-    // index's segment model): the base build is delta "base", appends
-    // add deltas, and the live set is codes.manifest — so an append
-    // that crashes mid-write is never served half-done (SaveMode.Append
-    // into shared cell partitions would be), and a retried append
-    // overwrites its own delta idempotently.
-    graft.ops.Layout.writePartitioned(
-      indexed.select(col("cell"), col(idCol), col("codes")),
-      s"$path/codes/base", Seq("cell"), Seq(idCol))
-    graft.ops.Manifest.write(codesManifest(path), Seq("base"))
+    // index's segment model): a build on a fresh path is delta "base",
+    // appends add deltas, and the live set is codes.manifest — so an
+    // append that crashes mid-write is never served half-done
+    // (SaveMode.Append into shared cell partitions would be), and a
+    // retried append overwrites its own delta idempotently. A rebuild
+    // over a LIVE index writes a new generation beside the live deltas
+    // and swaps the live set to it in one commit that keeps the
+    // streaming watermark; the superseded deltas are vacuumed below.
+    graft.ops.Manifest.ingest(codesManifest(path), batchId = None) { live =>
+      val name =
+        if (live.isEmpty) "base"
+        else s"refresh${graft.ops.Manifest.nextGeneration(live, "refresh", first = 1)}"
+      graft.ops.Layout.writePartitioned(
+        indexed.select(col("cell"), col(idCol), col("codes")),
+        s"$path/codes/$name", Seq("cell"), Seq(idCol))
+      Seq(name)
+    }
     cents.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }
       .toDF("cell_id", "vecd")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
@@ -500,33 +510,38 @@ object Similarity {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
     healthAgg(indexed)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/health")
+    vacuumCodes(path)
   }
 
   /** The index's code encoding — "raw" (codes of the vectors) or
-    * "residual" (IVFADC: codes of v − centroid(cell)). Indexes written
-    * before the encoding column existed read as "raw".
+    * "residual" (IVFADC: codes of v − centroid(cell)).
     */
   def readIndexEncoding(spark: org.apache.spark.sql.SparkSession,
-      path: String): String = {
-    val meta = spark.read.parquet(s"$path/meta")
-    if (meta.schema.fieldNames.contains("encoding"))
-      meta.select(col("encoding")).head().getString(0)
-    else "raw"
-  }
+      path: String): String =
+    spark.read.parquet(s"$path/meta").select(col("encoding")).head().getString(0)
 
   private def codesManifest(path: String): java.io.File =
     new java.io.File(s"$path/codes.manifest")
+
+  /** An index path is input from outside the program: one with no codes
+    * manifest was not built by [[writeIvfPqIndex]] (or is no index at
+    * all), and every read or maintenance entry point fails on it here.
+    */
+  private def requireIndex(path: String): Unit =
+    require(codesManifest(path).exists(),
+      s"no IVF-PQ index at $path (no codes.manifest): build it with writeIvfPqIndex")
 
   /** STREAMING ANN ingest — the vector twin of
     * `Retrieval.ingestStream`: each micro-batch appends one
     * manifest-committed delta named by its batch id, encoding against
     * the index's frozen constants. Effectively-once across every crash
-    * window by the same two mechanisms: an uncommitted delta is
-    * invisible (rewritten on replay), and the manifest's batch
-    * watermark makes a replayed batch id a no-op — so a retry can
-    * never double-insert vectors. The index must exist (base build)
-    * before the stream starts; the health/staleness baseline governs
-    * when to retrain and rebuild.
+    * window by the commit step all manifest stores share
+    * (`ops/Manifest.ingest`): an uncommitted delta is invisible
+    * (rewritten on replay), and the manifest's batch watermark makes a
+    * replayed batch id a no-op — so a retry can never double-insert
+    * vectors. The index must exist (base build) before the stream
+    * starts; the health/staleness baseline governs when to retrain and
+    * rebuild.
     */
   def ingestStream(vectors: DataFrame, path: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
@@ -536,16 +551,11 @@ object Similarity {
       }
 
   /** One streaming ANN ingest step (the [[ingestStream]] foreachBatch
-    * body, exposed for direct testing).
+    * body, exposed for direct testing): the batch appends delta
+    * `b<batchId>` as that batch's commit.
     */
-  def ingestBatch(batch: DataFrame, batchId: Long, path: String): Unit = {
-    if (graft.ops.Manifest.read(codesManifest(path))
-        .flatMap(_.maxBatch).exists(batchId <= _))
-      return // replay of an already-committed batch
-    if (batch.isEmpty) return
-    appendIvfPqIndex(batch, path, f"b$batchId%09d",
-      watermark = Some(batchId))
-  }
+  def ingestBatch(batch: DataFrame, batchId: Long, path: String): Unit =
+    appendIvfPqIndex(batch, path, f"b$batchId%09d", watermark = Some(batchId))
 
   /** Garbage-collect code-delta directories the manifest does not
     * reference (the residue of a crashed append).
@@ -556,21 +566,20 @@ object Similarity {
 
   /** The LIVE codes table: union of the manifest's delta directories —
     * each delta scan keeps its own cell-partition pruning, so a filter
-    * on `cell` above the union still opens only probed directories. A
-    * pre-delta index (no manifest) reads the flat codes table as before.
+    * on `cell` above the union still opens only probed directories.
     */
   def readCodes(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    graft.ops.Manifest.read(codesManifest(path)) match {
-      case Some(st) =>
-        st.entries.map(d => spark.read.parquet(s"$path/codes/$d"))
-          .reduce(_ unionByName _)
-      case None => spark.read.parquet(s"$path/codes")
-    }
+      path: String): DataFrame = {
+    requireIndex(path)
+    graft.ops.Manifest.read(codesManifest(path)).get.entries
+      .map(d => spark.read.parquet(s"$path/codes/$d"))
+      .reduce(_ unionByName _)
+  }
 
   /** Read back the constant side tables of a materialized index. */
   def readIndexSides(spark: org.apache.spark.sql.SparkSession,
       path: String): (String, String, Int, Book, Book) = {
+    requireIndex(path)
     val metaRows = spark.read.parquet(s"$path/meta").collect()
     require(metaRows.length == 1,
       s"index at $path: expected exactly 1 meta row, got ${metaRows.length}")
@@ -616,30 +625,25 @@ object Similarity {
     // would silently destroy the previous append's vectors.
     val spark = newVectors.sparkSession
     require(deltaName != "base", "delta name 'base' is reserved")
-    require(codesManifest(path).exists(),
-      s"index at $path predates the delta layout; rebuild with " +
-        "writeIvfPqIndex before appending")
     val (idCol, vecCol, m, cents, book) = readIndexSides(spark, path)
     val encoding = readIndexEncoding(spark, path)
-    // an empty append must commit nothing: a dataless delta directory
-    // (a lone _SUCCESS, no parquet footers) would make every subsequent
-    // readCodes fail schema inference — the whole index unservable
-    //
     // r13: one fused assign+encode pass serves the delta write AND the
     // staleness report (the writeIvfPqIndexWith note) — the pinned
     // frame is code-sized.
     val indexed = codesWithErr(
       stageForEncode(newVectors, idCol, vecCol, cents, encoding), Seq(idCol), book, m)
       .localCheckpoint(false)
-    if (!indexed.isEmpty) {
-      // delta fully written first, THEN the manifest commit makes it
-      // live (crash before the commit leaves the old view serving; a
-      // retried append overwrites this delta and re-commits the name)
+    // delta fully written first, THEN the manifest commit makes it live
+    // (crash before the commit leaves the old view serving; a retried
+    // append overwrites this delta and re-commits the name). An empty
+    // append writes no delta: a dataless directory (a lone _SUCCESS, no
+    // parquet footers) would make every later readCodes fail schema
+    // inference.
+    graft.ops.Manifest.ingest(codesManifest(path), watermark, indexed.isEmpty) { live =>
       graft.ops.Layout.writePartitioned(
         indexed.select(col("cell"), col(idCol), col("codes")),
         s"$path/codes/$deltaName", Seq("cell"), Seq(idCol))
-      graft.ops.Manifest.commit(codesManifest(path), deltaName,
-        watermark, adopt = Seq("base"))
+      live :+ deltaName
     }
     val appended = healthAgg(indexed)
       .withColumnRenamed("n_vecs", "n_appended")
@@ -690,7 +694,10 @@ object Similarity {
     *  - broad staleness → FULL rebuild with fresh training (same
     *    deterministic md5-seeded k-means, so rebuild-from-scratch over
     *    the same corpus produces the identical index — the `LayoutSpec`
-    *    equality proof), serving resuming from the new base.
+    *    equality proof): the new codes land in a new generation
+    *    directory, one commit swaps the live set to it, and the
+    *    superseded deltas are vacuumed — the live codes are never
+    *    rewritten in place.
     *
     * Either rung preserves the manifest's streaming batch watermark, so
     * a replayed ingest batch remains a no-op after a retrain. The
@@ -724,10 +731,8 @@ object Similarity {
     val trigger = nHot * hotShareDen >= nTot || meanRatio > meanErrRatio
     if (!trigger) return RefreshOutcome(retrained = false, "none", Nil, pinned)
 
+    requireIndex(path)
     val metaRow = spark.read.parquet(s"$path/meta").head()
-    require(metaRow.schema.fieldNames.contains("num_cells"),
-      s"index at $path predates hyperparameter-bearing meta; rebuild " +
-        "with writeIvfPqIndex before using refreshIfStale")
     val (idCol, vecCol) =
       (metaRow.getAs[String]("id_col"), metaRow.getAs[String]("vec_col"))
     val (numCells, m, k, dims, trainIters) = (
@@ -737,19 +742,13 @@ object Similarity {
     val hot = pinned.where(coalesce(col("err_ratio"),
         lit(Double.PositiveInfinity)) > hotErrRatio)
       .select(col("cell")).collect().map(_.getLong(0)).toSeq.sorted
-    val watermark = graft.ops.Manifest.read(codesManifest(path))
-      .flatMap(_.maxBatch)
     val partial = hot.nonEmpty &&
       hot.size <= (numCells * partialMaxCellShare).floor.toInt
+    // the full rung is a rebuild over the live index: a new codes
+    // generation, committed with the streaming watermark kept
     if (partial) refreshHotCells(corpus, path, hot)
-    else {
-      writeIvfPqIndex(corpus, idCol, vecCol, numCells, m, k, dims, path,
-        trainIters)
-      // writeIvfPqIndex starts a fresh manifest; restore the streaming
-      // watermark so a replayed ingest batch stays a no-op post-retrain
-      watermark.foreach(wm => graft.ops.Manifest.write(codesManifest(path),
-        Seq("base"), Some(wm)))
-    }
+    else writeIvfPqIndex(corpus, idCol, vecCol, numCells, m, k, dims, path,
+      trainIters)
     RefreshOutcome(retrained = true, if (partial) "partial" else "full",
       hot, pinned)
   }
@@ -788,9 +787,6 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     require(hotCells.nonEmpty, "refreshHotCells: empty hot-cell set")
-    require(codesManifest(path).exists(),
-      s"index at $path predates the delta layout; rebuild with " +
-        "writeIvfPqIndex before partial refresh")
     val (idCol, vecCol, m, cents, book) = readIndexSides(spark, path)
     val encoding = readIndexEncoding(spark, path)
     val hotSet = hotCells.toSet
@@ -845,32 +841,30 @@ object Similarity {
 
     // 4. consolidated delta: Spark-written hot partitions + byte-copied
     // cold files, then one atomic manifest swap (watermark preserved)
-    val manifest = codesManifest(path)
-    val live = graft.ops.Manifest.read(manifest).get
-    val gen = live.entries.flatMap(e =>
-      if (e.startsWith("refresh")) e.stripPrefix("refresh").toIntOption
-      else None).maxOption.getOrElse(0) + 1
-    val dname = s"refresh$gen"
-    graft.ops.Layout.writePartitioned(reEncoded, s"$path/codes/$dname",
-      Seq("cell"), Seq(idCol))
-    val codesDir = new java.io.File(s"$path/codes")
-    val target = new java.io.File(codesDir, dname)
-    for {
-      d <- live.entries
-      cellDir <- Option(new java.io.File(codesDir, d).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-      if cellDir.isDirectory && cellDir.getName.startsWith("cell=") &&
-        !hotSet.contains(cellDir.getName.stripPrefix("cell=").toLong)
-      f <- Option(cellDir.listFiles()).getOrElse(Array.empty[java.io.File])
-      if f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith(".")
-    } {
-      val dst = new java.io.File(new java.io.File(target, cellDir.getName),
-        s"$d-${f.getName}")
-      dst.getParentFile.mkdirs()
-      java.nio.file.Files.copy(f.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    graft.ops.Manifest.ingest(codesManifest(path), batchId = None) { live =>
+      val dname =
+        s"refresh${graft.ops.Manifest.nextGeneration(live, "refresh", first = 1)}"
+      graft.ops.Layout.writePartitioned(reEncoded, s"$path/codes/$dname",
+        Seq("cell"), Seq(idCol))
+      val codesDir = new java.io.File(s"$path/codes")
+      val target = new java.io.File(codesDir, dname)
+      for {
+        d <- live
+        cellDir <- Option(new java.io.File(codesDir, d).listFiles())
+          .getOrElse(Array.empty[java.io.File])
+        if cellDir.isDirectory && cellDir.getName.startsWith("cell=") &&
+          !hotSet.contains(cellDir.getName.stripPrefix("cell=").toLong)
+        f <- Option(cellDir.listFiles()).getOrElse(Array.empty[java.io.File])
+        if f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith(".")
+      } {
+        val dst = new java.io.File(new java.io.File(target, cellDir.getName),
+          s"$d-${f.getName}")
+        dst.getParentFile.mkdirs()
+        java.nio.file.Files.copy(f.toPath, dst.toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      }
+      Seq(dname)
     }
-    graft.ops.Manifest.write(manifest, Seq(dname), live.maxBatch)
 
     // side tables: refined centroids, merged health (both KB-sized and
     // fully collected above — no read-overwrite hazard)

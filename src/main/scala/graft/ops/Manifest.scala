@@ -6,20 +6,23 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, StandardCopyOption}
 import java.nio.file.StandardOpenOption.{CREATE, READ, TRUNCATE_EXISTING, WRITE}
 
-/** Atomic file-based COMMIT POINT for multi-directory index structures
-  * (the Lucene segments_N model, shared by the inverted-index segments
-  * and the IVF-PQ code deltas): the LIVE set of data directories is
-  * what the manifest file says, never what the filesystem happens to
-  * contain. Mutators fully write their data first and then replace the
-  * manifest in ONE atomic move, so a crash at any point leaves the
-  * previously-committed view serving — at worst with orphan directories
-  * that [[vacuum]] garbage-collects.
+/** The one COMMIT PROTOCOL of the four manifest stores — BM25 index
+  * segments (`ext/Retrieval`), IVF-PQ code deltas (`ext/Similarity`),
+  * near-dup cluster labels (`ext/Dedup`) and the SCD2 dimension
+  * (`ops/ScdStore`). The Lucene segments_N model: the LIVE set of data
+  * directories is what the manifest file says, never what the
+  * filesystem happens to contain, and a missing manifest is an empty
+  * store. Every change goes through [[ingest]]: the store writes its
+  * data in full, returns the new live set, and one atomic replace of
+  * the manifest publishes it — so a crash at any point leaves the
+  * previously committed view serving, at worst with orphan directories
+  * that [[vacuum]] garbage-collects and that no later commit adopts.
   *
-  * The manifest optionally carries a streaming batch WATERMARK
-  * (`#maxBatch=` header) updated in the same atomic replace, letting a
-  * streaming ingester detect the replay of a batch whose entry a later
-  * compaction folded away — the one replay window entry-name existence
-  * cannot detect.
+  * The manifest carries the streaming batch WATERMARK (`#maxBatch=`
+  * header) in the same atomic replace, so a replayed batch id is
+  * detected even after a compaction folded its entry away — the replay
+  * contract of Structured Streaming's foreachBatch sinks: a batch that
+  * runs again leaves the store as if it had run once.
   */
 object Manifest {
 
@@ -71,9 +74,10 @@ object Manifest {
     * commit point exists to prevent. Directory fsync is best-effort
     * (not supported on every filesystem). A watermarked write also
     * drops an immutable `.v<batch>` snapshot copy for [[readAt]].
+    * [[ingest]] is its one caller.
     */
-  def write(file: File, entries: Seq[String],
-      maxBatch: Option[Long] = None): Unit = {
+  private def write(file: File, entries: Seq[String],
+      maxBatch: Option[Long]): Unit = {
     val tmp = new File(file.getParentFile, file.getName + ".tmp")
     val header = maxBatch.map(b => s"#maxBatch=$b\n").getOrElse("")
     val bytes = (header + entries.sorted.mkString("", "\n", "\n"))
@@ -90,7 +94,7 @@ object Manifest {
     }
   }
 
-  /** The first half of [[write]]'s durable-replace recipe: a buffered
+  /** The first half of the manifest's durable-replace recipe: a buffered
     * stream onto `tmp` (created or truncated, parent directories made)
     * whose `close` fsyncs the bytes before closing the file.
     */
@@ -118,22 +122,45 @@ object Manifest {
     } catch { case _: IOException => () }
   }
 
-  /** Add a fully-written entry to the live set (one atomic replace),
-    * advancing the batch watermark if given. `adopt` supplies the
-    * baseline live set for pre-manifest structures (typically the
-    * current directory listing).
+  /** The one commit step of every manifest store, in order:
+    *
+    *  1. read the live set (no manifest: an empty store);
+    *  2. a `batchId` at or below the watermark is a REPLAY — change
+    *     nothing;
+    *  3. an `empty` batch stages nothing and only advances the
+    *     watermark: no data directory is written;
+    *  4. otherwise `stage` writes the store's data and returns the new
+    *     live set, which is published with the advanced watermark in
+    *     one atomic replace.
+    *
+    * A maintenance change (compaction, retrain, rebuild, a named
+    * segment or delta) passes no batch id: no replay guard, and the
+    * watermark carries over unchanged. `empty` is evaluated only after
+    * the replay check.
     */
-  def commit(file: File, entry: String, watermark: Option[Long],
-      adopt: => Seq[String]): Unit = {
-    val cur = read(file).getOrElse(State(adopt, None))
-    val wm = (cur.maxBatch.toSeq ++ watermark.toSeq).reduceOption(_ max _)
-    write(file, (cur.entries :+ entry).distinct, wm)
+  def ingest(file: File, batchId: Option[Long], empty: => Boolean = false)(
+      stage: Seq[String] => Seq[String]): Unit = {
+    val cur = read(file).getOrElse(State(Nil, None))
+    if (!batchId.exists(b => cur.maxBatch.exists(b <= _))) {
+      val live = if (empty) cur.entries else stage(cur.entries)
+      write(file, live.distinct, (cur.maxBatch ++ batchId).maxOption)
+    }
   }
+
+  /** The next name of a generation family `<prefix><n>`: one past the
+    * highest live generation, or `first` when none is live.
+    */
+  def nextGeneration(entries: Seq[String], prefix: String,
+      first: Long = 0L): Long =
+    entries.filter(_.startsWith(prefix))
+      .flatMap(_.stripPrefix(prefix).toLongOption)
+      .maxOption.fold(first)(_ + 1)
 
   /** Delete subdirectories of `dir` the manifest does not reference —
     * the garbage a crash between data-write and commit (or between
     * commit and cleanup) leaves behind. No-op without a manifest: there
-    * is then no authority to call a directory dead.
+    * is then no live set to keep, and no authority to call a directory
+    * dead.
     *
     * Single-maintainer assumption: a reader that listed the PREVIOUS
     * manifest and is still mid-scan can race a concurrent vacuum of the

@@ -6,10 +6,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental Type-2 dimension maintenance — the streaming/CDC twin of
-  * [[Scd.type2]], behind the same atomic manifest commit point as the
-  * index-segment and cluster-label stores ([[Manifest]]): change-event
-  * batches arrive forever and the versioned dimension must absorb them
-  * without re-versioning the whole history.
+  * [[Scd.type2]], one of the four stores behind [[Manifest]]'s commit
+  * step (with the index segments, IVF-PQ codes and cluster labels):
+  * change-event batches arrive forever and the versioned dimension must
+  * absorb them without re-versioning the whole history.
   *
   * Store layout under `path`, all governed by one manifest:
   *   - `dim-g<n>`  base generation: (key, version, attr, valid_from,
@@ -104,108 +104,98 @@ object ScdStore {
       else Some(spark.read.parquet(dirs.map(e => s"$path/$e"): _*))
     }
 
-  /** Ingest one change-event batch. Idempotent under foreachBatch replay
-    * (the manifest watermark); an empty batch only advances the
-    * watermark. Columns are canonicalized on write, so one store serves
-    * any (key, time, tieBreak, attr) source schema.
+  /** Ingest one change-event batch through the store's commit step
+    * ([[Manifest.ingest]]): a replayed batch id is a no-op and an empty
+    * batch only advances the watermark. Columns are canonicalized on
+    * write, so one store serves any (key, time, tieBreak, attr) source
+    * schema.
     */
   def ingestBatch(spark: SparkSession, path: String, batch: DataFrame,
       key: String, time: String, tieBreak: String, attr: String,
-      batchId: Long, maxDeltas: Int = 4): Unit = {
-    val mf = manifest(path)
-    val st = Manifest.read(mf)
-    if (st.exists(_.maxBatch.exists(batchId <= _))) return // replayed batch
-    val entries = st.map(_.entries).getOrElse(Seq.empty)
-    val wm = (st.flatMap(_.maxBatch).toSeq :+ batchId).max
-    if (batch.isEmpty) { Manifest.write(mf, entries, Some(wm)); return }
+      batchId: Long, maxDeltas: Int = 4): Unit =
+    Manifest.ingest(manifest(path), Some(batchId), batch.isEmpty) { entries =>
+      // Batch staging, pinned (batch-sized; consumed by the key set, the
+      // quarantine split, and the re-version).
+      val rows = batch.select(col(key).as("key"), col(time).as("t"),
+        col(tieBreak).as("tb"), col(attr).as("attr")).localCheckpoint(false)
+      val affKeys = rows.select(col("key")).distinct()
 
-    // Batch staging, pinned (batch-sized; consumed by the key set, the
-    // quarantine split, and the re-version).
-    val rows = batch.select(col(key).as("key"), col(time).as("t"),
-      col(tieBreak).as("tb"), col(attr).as("attr")).localCheckpoint(false)
-    val affKeys = rows.select(col("key")).distinct()
+      val curDim = foldByKey(spark, path, entries, "dim-g", "dim-b")
+      val curKw = foldByKey(spark, path, entries, "kw-g", "kw-b")
+      val storedCp = curDim.map(
+        _.join(broadcast(affKeys), Seq("key"), "left_semi"))
 
-    val curDim = foldByKey(spark, path, entries, "dim-g", "dim-b")
-    val curKw = foldByKey(spark, path, entries, "kw-g", "kw-b")
-    val storedCp = curDim.map(
-      _.join(broadcast(affKeys), Seq("key"), "left_semi"))
-
-    // Quarantine split against the per-key high water.
-    val withHw = curKw match {
-      case None => rows.withColumn("hw_t", lit(null).cast(rows.schema("t").dataType))
-        .withColumn("hw_tb", lit(null).cast(rows.schema("tb").dataType))
-      case Some(kw) => rows.join(
-        broadcast(kw.join(broadcast(affKeys), Seq("key"), "left_semi")),
-        Seq("key"), "left")
-    }
-    val accepted = withHw.where(col("hw_t").isNull ||
-        col("t") > col("hw_t") ||
-        (col("t") === col("hw_t") && col("tb") > col("hw_tb")))
-      .select(col("key"), col("t"), col("tb"), col("attr"))
-      .localCheckpoint(false)
-    val quarantined = withHw.where(!(col("hw_t").isNull ||
-        col("t") > col("hw_t") ||
-        (col("t") === col("hw_t") && col("tb") > col("hw_tb"))))
-      .select(col("key"), col("t"), col("tb"), col("attr"))
-
-    // Re-version the affected keys: stored change points re-enter as
-    // plain rows (their original time + tie-break), new rows append
-    // strictly after them by the high-water invariant.
-    val combined = storedCp match {
-      case None => accepted
-      case Some(cp) => cp.select(col("key"), col("valid_from").as("t"),
-          col("tb"), col("attr"))
-        .unionByName(accepted)
-    }
-    val redone = Scd.type2(combined, "key", "t", "tb", "attr",
-      keepTieBreak = true)
-
-    // New high water per key with accepted rows (all accepted rows sort
-    // above the old mark, so the batch max IS the new mark); keys whose
-    // rows all quarantined emit no row and keep their old mark via the
-    // fold.
-    val newKw = accepted.groupBy(col("key"))
-      .agg(max(struct(col("t"), col("tb"))).as("m"))
-      .select(col("key"), col("m.t").as("hw_t"), col("m.tb").as("hw_tb"))
-
-    val quarEntry =
-      if (quarantined.isEmpty) None
-      else {
-        val e = s"quar-b$batchId"
-        quarantined.write.mode("overwrite").parquet(s"$path/$e")
-        Some(e)
+      // Quarantine split against the per-key high water.
+      val withHw = curKw match {
+        case None => rows.withColumn("hw_t", lit(null).cast(rows.schema("t").dataType))
+          .withColumn("hw_tb", lit(null).cast(rows.schema("tb").dataType))
+        case Some(kw) => rows.join(
+          broadcast(kw.join(broadcast(affKeys), Seq("key"), "left_semi")),
+          Seq("key"), "left")
       }
-    val deltaBatches = entries.count(_.startsWith("dim-b")) + 1
-    if (curDim.isEmpty || deltaBatches > maxDeltas) {
-      // Compacting commit: fold untouched keys + this batch's re-version
-      // into a fresh base generation; delta entries leave the live set.
-      val gen = entries.find(_.startsWith("dim-g"))
-        .map(_.stripPrefix("dim-g").toLong + 1).getOrElse(0L)
-      val dimAll = curDim match {
-        case None => redone
-        case Some(dim) => dim.join(broadcast(affKeys), Seq("key"), "left_anti")
-          .unionByName(redone)
+      val accepted = withHw.where(col("hw_t").isNull ||
+          col("t") > col("hw_t") ||
+          (col("t") === col("hw_t") && col("tb") > col("hw_tb")))
+        .select(col("key"), col("t"), col("tb"), col("attr"))
+        .localCheckpoint(false)
+      val quarantined = withHw.where(!(col("hw_t").isNull ||
+          col("t") > col("hw_t") ||
+          (col("t") === col("hw_t") && col("tb") > col("hw_tb"))))
+        .select(col("key"), col("t"), col("tb"), col("attr"))
+
+      // Re-version the affected keys: stored change points re-enter as
+      // plain rows (their original time + tie-break), new rows append
+      // strictly after them by the high-water invariant.
+      val combined = storedCp match {
+        case None => accepted
+        case Some(cp) => cp.select(col("key"), col("valid_from").as("t"),
+            col("tb"), col("attr"))
+          .unionByName(accepted)
       }
-      val kwAll = curKw match {
-        case None => newKw
-        case Some(kw) =>
-          kw.join(broadcast(newKw.select(col("key"))), Seq("key"), "left_anti")
-            .unionByName(newKw)
+      val redone = Scd.type2(combined, "key", "t", "tb", "attr",
+        keepTieBreak = true)
+
+      // New high water per key with accepted rows (all accepted rows sort
+      // above the old mark, so the batch max IS the new mark); keys whose
+      // rows all quarantined emit no row and keep their old mark via the
+      // fold.
+      val newKw = accepted.groupBy(col("key"))
+        .agg(max(struct(col("t"), col("tb"))).as("m"))
+        .select(col("key"), col("m.t").as("hw_t"), col("m.tb").as("hw_tb"))
+
+      val quarEntry =
+        if (quarantined.isEmpty) None
+        else {
+          val e = s"quar-b$batchId"
+          quarantined.write.mode("overwrite").parquet(s"$path/$e")
+          Some(e)
+        }
+      val deltaBatches = entries.count(_.startsWith("dim-b")) + 1
+      if (curDim.isEmpty || deltaBatches > maxDeltas) {
+        // Compacting commit: fold untouched keys + this batch's re-version
+        // into a fresh base generation; delta entries leave the live set.
+        val gen = Manifest.nextGeneration(entries, "dim-g")
+        val dimAll = curDim match {
+          case None => redone
+          case Some(dim) => dim.join(broadcast(affKeys), Seq("key"), "left_anti")
+            .unionByName(redone)
+        }
+        val kwAll = curKw match {
+          case None => newKw
+          case Some(kw) =>
+            kw.join(broadcast(newKw.select(col("key"))), Seq("key"), "left_anti")
+              .unionByName(newKw)
+        }
+        dimAll.write.mode("overwrite").parquet(s"$path/dim-g$gen")
+        kwAll.write.mode("overwrite").parquet(s"$path/kw-g$gen")
+        entries.filterNot(e => e.startsWith("dim-") || e.startsWith("kw-")) ++
+          quarEntry :+ s"dim-g$gen" :+ s"kw-g$gen"
+      } else {
+        redone.write.mode("overwrite").parquet(s"$path/dim-b$batchId")
+        newKw.write.mode("overwrite").parquet(s"$path/kw-b$batchId")
+        entries ++ quarEntry :+ s"dim-b$batchId" :+ s"kw-b$batchId"
       }
-      dimAll.write.mode("overwrite").parquet(s"$path/dim-g$gen")
-      kwAll.write.mode("overwrite").parquet(s"$path/kw-g$gen")
-      val kept = entries.filterNot(e => e.startsWith("dim-") ||
-        e.startsWith("kw-"))
-      Manifest.write(mf,
-        kept ++ quarEntry.toSeq :+ s"dim-g$gen" :+ s"kw-g$gen", Some(wm))
-    } else {
-      redone.write.mode("overwrite").parquet(s"$path/dim-b$batchId")
-      newKw.write.mode("overwrite").parquet(s"$path/kw-b$batchId")
-      Manifest.write(mf,
-        entries ++ quarEntry.toSeq :+ s"dim-b$batchId" :+ s"kw-b$batchId",
-        Some(wm))
     }
-  }
 
   /** Garbage-collect directories the manifest no longer references
     * (superseded generations and deltas, crash orphans).

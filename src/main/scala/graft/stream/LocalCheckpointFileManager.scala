@@ -14,8 +14,9 @@ import graft.ops.Manifest
   * 35 ms per call on a 4-core Linux host, where this class's write takes
   * about 2 ms. Here the temp file is written with java.nio, fsync'd,
   * moved into place atomically and the directory fsync'd — the durable
-  * replace of [[Manifest.write]], through the same helpers. Every other
-  * operation, and both operations on a non-local scheme, are Spark's.
+  * replace of the store manifests ([[Manifest]]), through the same
+  * helpers. Every other operation, and both operations on a non-local
+  * scheme, are Spark's.
   *
   * Contract kept from Spark's: without overwrite an existing target
   * fails the rename with Hadoop's `FileAlreadyExistsException` (the

@@ -89,7 +89,8 @@ object ModelServing {
     * the constant feature × bin counter set; append mode emits a
     * window's bins once the watermark closes it. Downstream, any
     * window's emitted bins compare against the frozen baseline via
-    * [[psiVsBaseline]] (a batch computation over KB-sized frames).
+    * `ext/Drift.psiVsBaseline` (a batch computation over KB-sized
+    * frames); `Drift.featureBins` is the batch twin of these bins.
     */
   def windowedFeatureBins(docs: DataFrame, timeCol: String,
       windowDur: String = "1 minute",
@@ -98,15 +99,4 @@ object ModelServing {
       .withWatermark("event_time", watermark)
       .groupBy(window(col("event_time"), windowDur), col("feature"), col("bin"))
       .agg(count(lit(1)).as("cnt"))
-
-  /** Batch twin of the ingest side — delegates to the shared
-    * `ext/Drift` convention (single source of truth for bins/PSI).
-    */
-  def featureBins(docs: DataFrame): DataFrame = graft.ext.Drift.featureBins(docs)
-
-  /** PSI of observed bins vs a frozen baseline — `ext/Drift`'s
-    * spelling (identical to the batch drift_psi query by construction).
-    */
-  def psiVsBaseline(observed: DataFrame, baseline: DataFrame): DataFrame =
-    graft.ext.Drift.psiVsBaseline(observed, baseline)
 }

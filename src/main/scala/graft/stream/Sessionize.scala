@@ -3,9 +3,9 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, MapState, OutputMode, StatefulProcessor, TTLConfig,
-  TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState,
+  OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues,
+  ValueState}
 
 /** Sessionization — the canonical custom-state streaming operator the
   * reference lacks (SURVEY §2.6 "absent features"): group a user's events
@@ -14,9 +14,10 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   * Two implementations with identical semantics:
   *  - `batch`: lag-window + cumulative-sum session ids — declarative, one
   *    shuffle on the user key, oracle-checkable in SQL.
-  *  - `stream`: `flatMapGroupsWithState` keeping (start, last, count) per
-  *    user; a session is emitted when a later event opens the next one.
-  *    State is O(1) per key — the scale-safe shape for unbounded streams.
+  *  - `streamTws`: `transformWithState` keeping (start, last, count) per
+  *    user; a session is emitted when a later event opens the next one,
+  *    or when the watermark passes its gap. State is O(1) per active key
+  *    — the scale-safe shape for unbounded streams.
   */
 object Sessionize {
 
@@ -42,42 +43,13 @@ object Sessionize {
       .drop("session_seq")
   }
 
-  /** Streaming flavor over a Dataset of (user_id, ts_ms). Emits each
-    * session once its successor opens (append mode, NoTimeout — a
-    * production variant would add an event-time timeout to flush idle
-    * sessions against the watermark).
-    */
-  def stream(events: Dataset[(Long, Long)], gapMs: Long): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (user: Long, rows: Iterator[(Long, Long)], state: GroupState[SessionState]) => {
-          val times = rows.map(_._2).toSeq.sorted
-          var st = state.getOption
-          val closed = Seq.newBuilder[Session]
-          times.foreach { t =>
-            st match {
-              case Some(s) if t - s.last <= gapMs =>
-                st = Some(s.copy(last = math.max(s.last, t), n = s.n + 1))
-              case Some(s) =>
-                closed += Session(user, s.start, s.last, s.n)
-                st = Some(SessionState(t, t, 1))
-              case None =>
-                st = Some(SessionState(t, t, 1))
-            }
-          }
-          st.foreach(state.update)
-          closed.result().iterator
-        })
-  }
-
-  /** transformWithState flavor (the arbitrary-state API that supersedes
-    * flatMapGroupsWithState): same fold, plus an EVENT-TIME TIMER at
-    * `session_end + gap` so an idle session flushes when the watermark
-    * passes its gap — the `stream` flavor above only closes a session
-    * when its successor arrives, so a user who never returns leaves a
-    * session (and its state) stranded forever. Timers make state O(1)
-    * per ACTIVE key rather than per key ever seen.
+  /** Streaming flavor (transformWithState, the arbitrary-state API that
+    * supersedes flatMapGroupsWithState): the batch fold run per key,
+    * plus an EVENT-TIME TIMER at `session_end + gap` so an idle session
+    * flushes when the watermark passes its gap — closing a session only
+    * when its successor arrives would leave the session (and its state)
+    * of a user who never returns stranded forever. Timers make state
+    * O(1) per ACTIVE key rather than per key ever seen.
     *
     * Input: (user_id, ts) with `ts` a watermarked timestamp column.
     * Requires the RocksDB state store provider (the only provider that

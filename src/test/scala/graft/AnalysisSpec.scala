@@ -92,11 +92,34 @@ class AnalysisSpec extends SparkSpec {
     assert(got.forall(r => r._2 >= t0 && r._2 <= t1), s"epoch_sec outside [$t0, $t1]: ${got.mkString}")
   }
 
-  test("S6 plot sinks: exp1/exp2 SVG figures carry the summary's data points") {
-    // Two labeled runs -> summary -> figures. The SVG must be
-    // self-contained markup with one marker per summary row (exp1 line
-    // plots) / one bar per configuration (exp2), correct titles and axis
-    // labels — the content a paper-reproducer reads without matplotlib.
+  /** Filled circle markers of a line figure in series color `rgb`: an
+    * 8-px marker always holds a 4×4 block of exact series-color pixels,
+    * which the 2-px polyline never does; blocks within a marker's width
+    * of each other are one marker.
+    */
+  private def markers(img: java.awt.image.BufferedImage, rgb: Int): Int = {
+    val blocks = for {
+      x <- 0 until img.getWidth - 3; y <- 0 until img.getHeight - 3
+      if (0 to 3).forall(dx => (0 to 3).forall(dy => img.getRGB(x + dx, y + dy) == rgb))
+    } yield (x, y)
+    blocks.foldLeft(List.empty[(Int, Int)]) { (found, b) =>
+      if (found.exists(f => math.abs(f._1 - b._1) <= 8 && math.abs(f._2 - b._2) <= 8)) found
+      else b :: found
+    }.size
+  }
+
+  /** Bars of a bar figure in color `rgb`: runs of that color along the
+    * pixel row just above the baseline.
+    */
+  private def bars(img: java.awt.image.BufferedImage, rgb: Int): Int = {
+    val row = (0 until img.getWidth).map(x => img.getRGB(x, img.getHeight - 64 - 2) == rgb)
+    row.zip(false +: row.dropRight(1)).count { case (cur, prev) => cur && !prev }
+  }
+
+  test("S6 plot sinks: exp1/exp2 PNG figures carry the summary's data points") {
+    // Two labeled runs -> summary -> figures: the PNG files the
+    // reference's matplotlib scripts save, with one marker per summary
+    // row (exp1 line plots) and one bar per configuration (exp2).
     val m = Analysis.withThroughput(
       Seq((0L, 100L, 5000L, 100.0, 90.0, 200.0, 300.0),
         (1L, 105L, 5000L, 110.0, 95.0, 220.0, 330.0),
@@ -108,38 +131,28 @@ class AnalysisSpec extends SparkSpec {
           org.apache.spark.sql.functions.when($"batch_events" === 5000L, 1000)
             .otherwise(8000)), triggerSec = 5)
     val summary = Analysis.summarize(m, "rate_eps_input")
-    val out = graft.TempStores.newStorePath("graft_svg").toString
+    val out = graft.TempStores.newStorePath("graft_png").toString
+    val blue = new java.awt.Color(0x1f, 0x77, 0xb4).getRGB
+    def read(p: String) = javax.imageio.ImageIO.read(new java.io.File(p))
     val figs = graft.analysis.Plot.exp1Figures(summary, out)
     assert(figs.map(p => p.substring(p.lastIndexOf('/') + 1)).toSet ==
-      Set("throughput_vs_rate.svg", "p95_latency_vs_rate.svg",
-        "throughput_vs_rate.png", "p95_latency_vs_rate.png"))
-    val thr = Files.readString(java.nio.file.Paths.get(figs.head))
-    assert(thr.startsWith("<svg ") && thr.endsWith("</svg>"))
-    assert(thr.contains("Throughput vs Input Rate"))
-    assert(thr.contains("Input rate (events/sec)"))
-    assert("<circle ".r.findAllIn(thr).size == 2, "one marker per rate row")
-    assert(thr.contains("<polyline "))
-    val lat = Files.readString(java.nio.file.Paths.get(figs(1)))
-    assert(lat.contains("p95 Latency vs Input Rate"))
+      Set("throughput_vs_rate.png", "p95_latency_vs_rate.png"))
+    figs.foreach(p => assert(markers(read(p), blue) == 2, s"one marker per rate row in $p"))
 
     val summary2 = Analysis.summarize(
       m.withColumnRenamed("rate_eps_input", "x")
         .withColumn("configuration",
           org.apache.spark.sql.functions.concat(
             org.apache.spark.sql.functions.lit("cfg_"), $"x")), "configuration")
-    val bar = Files.readString(java.nio.file.Paths.get(
-      graft.analysis.Plot.exp2Figure(summary2, out)))
-    assert("<rect x=".r.findAllIn(bar).size == 2, "one bar per configuration")
-    assert(bar.contains("cfg_1000") && bar.contains("cfg_8000"))
-    assert(bar.contains("Average p95 latency (ms)"))
+    val bar = graft.analysis.Plot.exp2Figure(summary2, out)
+    assert(bar.endsWith("/exp2_p95_latency.png"))
+    assert(bars(read(bar), blue) == 2, "one bar per configuration")
   }
 
   test("S6 plot sinks: PNG twins decode with the figure's data drawn") {
     // matplotlib parity (analyze_exp1.py:123): the PNG path must write a
     // real decodable raster — correct canvas, series drawn in the figure
-    // color, not a blank frame. Marker centers land where the SVG's
-    // circle markers sit (shared layout arithmetic), so the series color
-    // must appear both at a known marker coordinate and in volume.
+    // color, not a blank frame.
     val blue = new java.awt.Color(0x1f, 0x77, 0xb4).getRGB
     val img = graft.analysis.Plot.linePng(
       Seq((1000.0, 100.0), (8000.0, 400.0)), "t", "x", "y")
@@ -152,11 +165,7 @@ class AnalysisSpec extends SparkSpec {
     val bar = graft.analysis.Plot.barPng(
       Seq(("a", 5.0), ("b", 9.0)), "t", "y")
     // two bars -> two horizontal blue runs along the baseline-1 row
-    val rowY = 420 - 64 - 2
-    val row = (0 until 640).map(x => bar.getRGB(x, rowY) == blue)
-    val runs = row.zip(false +: row.dropRight(1)).count {
-      case (cur, prev) => cur && !prev
-    }
+    val runs = bars(bar, blue)
     assert(runs == 2, s"expected 2 bar runs, got $runs")
     // PNG encode -> decode round-trip through the byte codec
     val outDir = graft.TempStores.newStorePath("graft_png").toString

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.ext.QualityModel
+import graft.ext.{Drift, QualityModel}
 import graft.stream.ModelServing
 
 /** Batch-train → stream-serve edge (`stream/ModelServing`): the trained
@@ -114,7 +114,7 @@ class ModelServingSpec extends SparkSpec {
       .mapValues(_.map(r => (r._2, r._3) -> r._4).toMap).toMap
     // batch twin per window
     def batchBins(ids: Set[Long]): Map[(String, Long), Long] =
-      ModelServing.featureBins(docs.where($"doc_id".isin(ids.toSeq: _*)))
+      Drift.featureBins(docs.where($"doc_id".isin(ids.toSeq: _*)))
         .as[(String, Long, Long)].collect()
         .map(r => (r._1, r._2) -> r._3).toMap
     val w0Ids = timed.filter(_._3 == 1000L).map(_._1).toSet
@@ -122,17 +122,17 @@ class ModelServingSpec extends SparkSpec {
     assert(emitted(0L) == batchBins(w0Ids), "window 0 bins")
     assert(emitted(60000L) == batchBins(w1Ids), "window 1 bins")
     // PSI of the full training corpus against itself is exactly 0
-    val base = ModelServing.featureBins(docs)
-    val self = ModelServing.psiVsBaseline(base, base)
+    val base = Drift.featureBins(docs)
+    val self = Drift.psiVsBaseline(base, base)
       .agg(sum(abs($"psi"))).head().getDouble(0)
     assert(self == 0.0, s"self-PSI $self")
     // PSI of window-0's emitted bins vs baseline == the same computation
     // from the batch twin (streamed counts are the same counts)
     val w0df = emitted(0L).toSeq.map { case ((f, b), c) => (f, b, c) }
       .toDF("feature", "bin", "cnt")
-    val viaStream = ModelServing.psiVsBaseline(w0df, base)
+    val viaStream = Drift.psiVsBaseline(w0df, base)
       .orderBy("feature", "bin").collect().toSeq
-    val viaBatch = ModelServing.psiVsBaseline(
+    val viaBatch = Drift.psiVsBaseline(
         batchBins(w0Ids).toSeq.map { case ((f, b), c) => (f, b, c) }
           .toDF("feature", "bin", "cnt"), base)
       .orderBy("feature", "bin").collect().toSeq

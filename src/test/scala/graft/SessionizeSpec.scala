@@ -41,25 +41,36 @@ class SessionizeSpec extends SparkSpec {
     }
   }
 
-  test("streaming sessionization with flatMapGroupsWithState matches batch semantics") {
-    val input = MemoryStream[(Long, Long)](spark)
-    val q = Sessionize.stream(input.toDS(), gap)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("sessions")
-      .start()
+  test("transformWithState sessionization: a successor event closes the session, as in batch") {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      input.addData((1L, 100L), (1L, 500L))
-      q.processAllAvailable()
-      input.addData((1L, 5000L)) // opens session 2 -> closes session 1
-      q.processAllAvailable()
-      input.addData((1L, 9000L)) // opens session 3 -> closes session 2
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("sessions")
-      .as[Sessionize.Session].collect().sortBy(_.session_start_ms).toSeq
-    assert(got == Seq(
-      Sessionize.Session(1L, 100L, 500L, 2L),
-      Sessionize.Session(1L, 5000L, 5000L, 1L)))
+      def t(ms: Long) = new java.sql.Timestamp(ms)
+      val input = MemoryStream[(Long, java.sql.Timestamp)](spark)
+      val df = input.toDF().toDF("user_id", "ts").withWatermark("ts", "0 seconds")
+      val q = Sessionize.streamTws(df, gap)
+        .writeStream.outputMode("append")
+        .format("memory").queryName("sessions")
+        .start()
+      try {
+        input.addData((1L, t(100L)), (1L, t(500L)))
+        q.processAllAvailable()
+        input.addData((1L, t(5000L))) // opens session 2 -> closes session 1
+        q.processAllAvailable()
+        input.addData((1L, t(9000L))) // opens session 3 -> closes session 2
+        q.processAllAvailable()
+      } finally q.stop()
+      val got = spark.table("sessions")
+        .as[Sessionize.Session].collect().sortBy(_.session_start_ms).toSeq
+      assert(got == Seq(
+        Sessionize.Session(1L, 100L, 500L, 2L),
+        Sessionize.Session(1L, 5000L, 5000L, 1L)))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
   }
 
   test("transformWithState sessionization flushes idle sessions via event-time timer") {
