@@ -41,7 +41,7 @@ class SessionizeSpec extends SparkSpec {
     }
   }
 
-  test("transformWithState sessionization: a successor event closes the session, as in batch") {
+  test("transformWithState sessionization: a successor event closes the session") {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
