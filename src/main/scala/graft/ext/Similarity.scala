@@ -1043,15 +1043,15 @@ object Similarity {
     * chose keeps its previous value (the standard empty-cluster rule).
     * Per-iteration driver traffic is the k×D book — constant — so the
     * loop is scale-safe at any corpus size. SSE is non-increasing by the
-    * k-means argument; measured on the fixture in tools/AnnRecall.
+    * k-means argument; the measured SSE ladder is in SURVEY §8 ("ANN
+    * trained-vs-seed").
     */
   def trainPqBook(embeddings: DataFrame, idCol: String, vecCol: String,
-      m: Int, k: Int, dims: Int, iters: Int,
-      init: Option[Book] = None): Book = {
+      m: Int, k: Int, dims: Int, iters: Int): Book = {
     require(dims % m == 0, s"dims=$dims must divide into m=$m subspaces")
     val sub = dims / m
     val staged = embeddings.select(col(idCol), asDouble(col(vecCol)).as("vecd"))
-    var book: Book = init.getOrElse(seedBook(embeddings, idCol, vecCol, k))
+    var book: Book = seedBook(embeddings, idCol, vecCol, k)
     for (_ <- 1 to iters) {
       val means = staged
         .select(col("vecd"),
@@ -1136,41 +1136,6 @@ object Similarity {
       .select(col(idCol), col("vecd"), col("nrm"), col("_best.cell_id").as("cell"))
   }
 
-  /** [[ivfTopK]] against EXPLICIT (e.g. trained) centroids: the serving
-    * plan is unchanged — broadcast-argmax assign → nprobe nearest cells
-    * by centroid cosine (driver-side over the cells-sized constants) →
-    * exact cosine within probed cells → TakeOrdered. The full-precision
-    * twin of [[ivfPqTopKWith]]: it isolates the CENTROID contribution to
-    * recall, with no code-compression error in the ranking.
-    */
-  def ivfTopKWith(embeddings: DataFrame, idCol: String, vecCol: String,
-      queryId: Long, cents: Book, nprobe: Int, k: Int): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val assign = ivfAssignWith(embeddings, idCol, vecCol, cents)
-    val qvec = collectQueryVec(embeddings, idCol, vecCol, queryId)
-    val qn = math.sqrt(qvec.map(x => x * x).sum)
-    val probed = cents.map { case (cid, cv) =>
-      var d = 0.0; var nn = 0.0
-      var i = 0
-      while (i < cv.length) { d += cv(i) * qvec(i); nn += cv(i) * cv(i); i += 1 }
-      (-(d / (math.sqrt(nn) * qn)), cid)
-    }.sortBy(identity).take(nprobe).map(_._2).toSeq
-    val probeDf = broadcast(probed.toDF("cell"))
-    val q = broadcast(assign.where(col(idCol) === queryId)
-      .select(col("vecd").as("qvec"), col("nrm").as("qnrm")))
-    assign.join(probeDf, Seq("cell"))
-      .crossJoin(q)
-      .select(col(idCol),
-        round(dot(col("vecd"), col("qvec")) / (col("nrm") * col("qnrm")), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** [[pqAdcTopK]] against an EXPLICIT codebook: same zero-shuffle
-    * scan → encode → LUT-sum → TakeOrdered serving plan, with the LUT
-    * built from the supplied (e.g. trained) book.
-    */
   /** Collect the single query vector (as doubles) for id `queryId` —
     * shared by every serving path that builds a driver-side LUT or
     * literal from it; fails loudly on 0 or >1 matches.
@@ -1184,18 +1149,6 @@ object Similarity {
       case other => throw new IllegalArgumentException(
         s"query id $queryId matched ${other.length} rows, want exactly 1")
     }
-
-  def pqAdcTopKWith(embeddings: DataFrame, idCol: String, vecCol: String,
-      queryId: Long, book: Book, m: Int, topK: Int): DataFrame = {
-    val qvec = collectQueryVec(embeddings, idCol, vecCol, queryId)
-    val lut = adcLut(book, qvec, m)
-    pqEncodeWith(embeddings, idCol, vecCol, book, m)
-      .select(col(idCol),
-        (graft.functions.VectorExpressions.pq_adc_sum(col("codes"), lut,
-          book.map(_._1)) / 1e6).as("adc_l2sq"))
-      .orderBy(col("adc_l2sq").asc, col(idCol))
-      .limit(topK)
-  }
 
   /** [[ivfPqTopK]] with EXPLICIT trained centroids and codebook — the
     * serving plan is unchanged (broadcast-argmax assign → nprobe-cell
@@ -1248,7 +1201,7 @@ object Similarity {
     * broadcast (shortlist rows), so the whole rerank adds zero shuffles.
     * Recovers the ADC quantization loss: recall is bounded by cell
     * pruning (what the shortlist missed), not by code precision — see
-    * `tools/AnnRecall`.
+    * SURVEY §8 ("IVF-PQ two-stage rerank").
     */
   def ivfPqRerankWith(embeddings: DataFrame, idCol: String, vecCol: String,
       queryId: Long, cents: Book, nprobe: Int, book: Book, m: Int,
@@ -1271,10 +1224,9 @@ object Similarity {
     * to ties — then the exact-cosine re-rank orders what the shortlist
     * caught. Same zero-extra-shuffle shape (shortlist ids broadcast back
     * onto the vector table); the shortlist finally contains the right
-    * candidates (measured in tools/AnnRecall on the clustered fixture:
-    * rerank@50 recall 0.40 with the raw-trained shortlist → 0.82 with
-    * the k=256 residual shortlist, against the nprobe=2 IVF ceiling
-    * of 1.00).
+    * candidates (SURVEY §8, "Clustered ANN fixture": rerank@50 recall
+    * 0.40 with the raw-trained shortlist → 0.82 with the k=256 residual
+    * shortlist, against the nprobe=2 IVF ceiling of 1.00).
     */
   def ivfPqResidualRerankWith(embeddings: DataFrame, idCol: String,
       vecCol: String, queryId: Long, cents: Book, nprobe: Int, book: Book,
@@ -1391,24 +1343,6 @@ object Similarity {
       s"seedResidualBook: want ids $k until ${2 * k} dense, got ${rows.length}")
     rows
   }
-
-  /** [[trainPqBook]] over RESIDUALS (v − cell centroid) — the IVFADC
-    * codebook of Jégou et al. 2011 §IV: after coarse quantization the
-    * code bits must spend themselves on the WITHIN-cell variance, not
-    * re-describe the between-cell structure the centroids already
-    * capture. On clustered data a raw-vector book collapses (every
-    * member of a probed cell encodes to near-identical codes and ADC
-    * ranking degenerates to ties — measured in tools/AnnRecall); the
-    * residual book restores within-cell discrimination. Same plan
-    * shapes as the raw trainer: per-iteration driver traffic is the
-    * k×D book, constant at any corpus size.
-    */
-  def trainPqBookResidual(embeddings: DataFrame, idCol: String,
-      vecCol: String, cents: Book, m: Int, k: Int, dims: Int,
-      iters: Int): Book =
-    trainPqBook(residuals(embeddings, idCol, vecCol, cents), idCol, "resd",
-      m, k, dims, iters,
-      init = Some(seedResidualBook(embeddings, idCol, vecCol, cents, k)))
 
   /** Residual IVF-PQ serving (IVFADC): probe the nprobe nearest cells by
     * centroid cosine, then rank candidates by ADC over RESIDUAL codes —

@@ -56,8 +56,8 @@ case class TopKPerKey(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
   * the held rows and the rest of the input feed a spillable
   * (key asc, order) sort, and a group-scan emits the first k rows per
   * key. Same rows either way; only the memory ceiling differs. Proved by
-  * `TopKSpec` (row equality both modes) and `tools/TopKStress` (20M
-  * distinct keys under a 1 GB JVM).
+  * `TopKSpec` (row equality both modes); the 20M-distinct-key run under
+  * a 1 GB JVM is recorded in SURVEY §8 ("spill-safe TopKPerKey").
   */
 case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
     child: SparkPlan) extends UnaryExecNode {

@@ -38,8 +38,8 @@ object ExtensionQueries extends QueryPack {
   /** Lloyd iterations for the TRAINED PQ/IVF catalog queries — fixed so
     * the DuckDB oracle can replay the exact training chain (each
     * iteration is one generated CTE block; see duckPqTrainedChain).
-    * tools/AnnRecall trains deeper (to the SSE plateau) where no
-    * cross-engine mirror is needed.
+    * The SSE ladder in SURVEY §8 ("ANN trained-vs-seed") was measured
+    * deeper (to the plateau), where no cross-engine mirror is needed.
     */
   val PqTrainIters = 2
 
@@ -574,8 +574,8 @@ object ExtensionQueries extends QueryPack {
     // spend themselves on WITHIN-cell variance instead of re-describing
     // the between-cell structure the coarse quantizer already captured —
     // on clustered corpora the raw-vector book collapses to ties inside
-    // a probed cell (measured in tools/AnnRecall: recall 0.11 raw-trained
-    // vs 0.43 residual at k=256, same nprobe). Serving adds one
+    // a probed cell (SURVEY §8, "Clustered ANN fixture": recall 0.11
+    // raw-trained vs 0.43 residual at k=256, same nprobe). Serving adds one
     // per-probed-cell LUT dispatch (nested CASE over nprobe branches,
     // all codegen) to the ivfpq plan: broadcast-argmax assign →
     // nprobe-cell semi-filter → native residual encode + per-cell
@@ -674,7 +674,7 @@ object ExtensionQueries extends QueryPack {
     }),
 
     // Residual shortlist + exact rerank — the best serving plan the
-    // engine has on clustered corpora (AnnRecall: rerank recall 0.40
+    // engine has on clustered corpora (SURVEY §8: rerank recall 0.40
     // with a raw-trained shortlist vs 0.82 with the k=256 residual
     // shortlist at the same nprobe/width; here the oracled k=16 seed
     // variant pins the arithmetic). Stage 1 = sim_ivfpq_residual_topk
@@ -721,7 +721,7 @@ object ExtensionQueries extends QueryPack {
     // vectors decide their ORDER — per-query rerank work is
     // O(shortlist·dims) at any corpus size, zero added shuffles, and
     // recall becomes cell-pruning-bounded instead of code-precision-
-    // bounded (measured in tools/AnnRecall).
+    // bounded (recorded in SURVEY §8, "IVF-PQ two-stage rerank").
     "sim_ivfpq_rerank" -> ((s, d) => {
       val e = embeddings(s, d)
       val cents = Similarity.trainIvfCentroids(e, "vec_id", "embedding",

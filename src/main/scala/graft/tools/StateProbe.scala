@@ -5,10 +5,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming state-scale probe (dev evidence, not part of the driver
-  * contract): the batch side has ScaleProbe/SkewProbe/EwmaProbe; this is
-  * the stateful-streaming counterpart. Millions of distinct keys run
-  * through the RocksDB state store provider and the probe MEASURES what
-  * the scale claims assert:
+  * contract): the batch side has ScaleProbe and the skew and giant-key
+  * runs recorded in SURVEY §8; this is the stateful-streaming
+  * counterpart. Millions of distinct keys run through the RocksDB state
+  * store provider and the probe MEASURES what the scale claims assert:
   *
   *  - `ewma`: [[graft.stream.Ewma.stream]] (transformWithState,
   *    ValueState/key). R rounds of K NEW keys each — per-batch wall time

@@ -245,7 +245,7 @@ class LayoutSpec extends SparkSpec {
     // corpus must serve the drifted query at least as well as the stale
     // frozen constants did. The absolute level is fixture-bound, not a
     // quality ceiling: on this isotropic fixture IVF-PQ recall@10 is
-    // nprobe-limited (~0.23–0.27 at nprobe=4/16 cells, r8 AnnRecall
+    // nprobe-limited (~0.23–0.27 at nprobe=4/16 cells, the r8 recall
     // grid in SURVEY §8) — the measured 0.4 here is deterministic and
     // pinned as the floor
     val freshRecall = recallOf(path)

@@ -6,10 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source lints over `src/main`: every session goes through the one
   * factory (`Sessions`), engine conf keys and Hadoop `FileSystem` handles
-  * stay on short allow-lists, a comment that names a spec names one that
-  * exists, the store manifests are written only by `Manifest`'s commit
-  * step, and every public def has a production caller or is on the
-  * named engine surface list.
+  * stay on short allow-lists, a comment that names a spec or a
+  * `graft.tools` program names one that exists, the store manifests are
+  * written only by `Manifest`'s commit step, every public def has a
+  * production caller or is on the named engine surface list, and every
+  * `main` is a listed entry point that a document runs.
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -21,6 +22,14 @@ class SourceLintSpec extends AnyFunSuite {
     val dir = new File(root)
     assert(dir.isDirectory, s"$root not found from ${new File(".").getAbsolutePath}")
     walk(dir)
+  }
+
+  private def squash(t: String) = t.replaceAll("\\s+", " ")
+
+  /** The documents at `paths` (from the repo root), whitespace squashed. */
+  private def docs(paths: String*): Seq[String] = paths.map { p =>
+    val src = scala.io.Source.fromFile(p, "UTF-8")
+    try squash(src.mkString) finally src.close()
   }
 
   private def lines(f: File): Seq[(String, Int)] = {
@@ -64,6 +73,15 @@ class SourceLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  /** (line number, comment text) of each line of `f` that holds a
+    * comment: a scaladoc or block-comment line, or the `//` tail.
+    */
+  private def commentLines(f: File): Seq[(Int, String)] = lines(f).flatMap { case (l, n) =>
+    val t = l.trim
+    if (t.startsWith("*") || t.startsWith("/*")) Some(n -> t)
+    else Option.when(l.contains("//"))(n -> l.substring(l.indexOf("//")))
+  }
+
   test("every *Spec named in a src/main comment exists under src/test") {
     // Spark's own window-spec classes are not graft specs.
     val spark = Set("WindowSpec", "WindowSpecDefinition")
@@ -75,13 +93,22 @@ class SourceLintSpec extends AnyFunSuite {
     val named = """\b[A-Z]\w*Spec\b""".r
     val missing = for {
       f <- scalaFiles("src/main")
-      (l, n) <- lines(f)
-      t = l.trim
-      comment = if (t.startsWith("*") || t.startsWith("/*")) t
-        else if (l.contains("//")) l.substring(l.indexOf("//"))
-        else ""
+      (n, comment) <- commentLines(f)
       m <- named.findAllIn(comment) if !defined(m) && !spark(m)
     } yield s"${f.getPath}:$n names $m"
+    assert(missing.isEmpty, missing.mkString("\n"))
+  }
+
+  test("every graft.tools program named in a comment exists under src/main") {
+    // A retired dev main lives on in git history and in the SURVEY row
+    // that records its numbers; a comment cites that row, not the tool.
+    val tools = scalaFiles("src/main/scala/graft/tools").map(_.getName.stripSuffix(".scala")).toSet
+    val named = """\b(?:graft\.)?tools[./]([A-Z]\w*)""".r
+    val missing = for {
+      f <- scalaFiles("src/main") ++ scalaFiles("src/test")
+      (n, comment) <- commentLines(f)
+      m <- named.findAllMatchIn(comment) if !tools(m.group(1))
+    } yield s"${f.getPath}:$n names ${m.matched}"
     assert(missing.isEmpty, missing.mkString("\n"))
   }
 
@@ -140,8 +167,9 @@ class SourceLintSpec extends AnyFunSuite {
     * (`perfbench/src`). A definition spans its `def` line and the lines
     * indented deeper below it, plus a closing bracket at its own indent,
     * so recursion is not a caller. An `apply` is also called as
-    * `Owner(...)`. Exempt: program entry points (`main`) and the
-    * `QueryPack` members, which the catalog calls through the trait.
+    * `Owner(...)`. Exempt: the `QueryPack` members, which the catalog
+    * calls through the trait. A `main` is reported like any other def;
+    * it stays only as a listed entry point.
     */
   private def uncalledPublicDefs(): Seq[(File, Int, String)] = {
     val main = scalaFiles("src/main")
@@ -173,7 +201,6 @@ class SourceLintSpec extends AnyFunSuite {
       mods = m.group(2).split("\\s+").toSet
       if !mods.exists(x => x.startsWith("private") || x.startsWith("protected") || x == "override")
       name = m.group(3)
-      if name != "main"
       k = m.group(1).length
       (kind, owner, decl) = ls.take(i).reverseIterator
         .flatMap(x => ownerLine.findPrefixMatchOf(x).filter(_.group(1).length < k))
@@ -280,7 +307,58 @@ class SourceLintSpec extends AnyFunSuite {
     "Dedup.vacuumClusterStore" ->
       ("incremental cluster maintenance (r8 wave 4)", "ClusterIngestSpec"),
     "Similarity.refreshIfStale" -> ("ANN retrain-under-ingest closed", "LayoutSpec"),
+    // tokenizer serving: builds the greedy vocabulary, then tokenizes
+    "Bpe.greedyTokenize" -> ("greedy-WordPiece serving", "BpeSpec"),
   )
+
+  /** The program entry points in `src/main`, one per `def main`: the
+    * driver contract, the paper's streaming, recovery and analysis runs,
+    * and the dev mains a document still runs. Each entry names
+    * the phrase of README.md, ROADMAP.md or the verify skill that runs
+    * it. A dev main whose finding is recorded and that no document runs
+    * is deleted; its numbers stay where they are recorded.
+    */
+  private val entryPoints: Map[String, String] = Map(
+    // driver contract
+    "Verify.main" -> "runMain graft.Verify",
+    "Bench.main" -> "runMain graft.Bench",
+    // the paper's experiments: streaming job, recovery run, analysis
+    "StreamBench.main" -> "`graft.stream.StreamBench` drives the full pipeline",
+    "RecoveryBench.main" -> "`graft.stream.RecoveryBench` is the experiment-3 analog",
+    "Exp1Main.main" -> "`graft.analysis.Exp1Main` writes `throughput_vs_rate.png`",
+    "Exp2Main.main" -> "`Exp2Main` writes `exp2_p95_latency.png`",
+    "Exp3Main.main" -> "`Exp1Main` / `Exp2Main` / `Exp3Main` also write the same summary tables",
+    // dev mains: bench attribution, scale and streaming-state probes
+    "Time.main" -> "runMain graft.tools.Time",
+    "Canary.main" -> "runMain graft.tools.Canary",
+    "JobAudit.main" -> "`tools/JobAudit [query...]`",
+    "ScaleProbe.main" -> "`ScaleProbe` builds that corpus locally from sf0.1",
+    "StateProbe.main" -> "Streaming state at scale (`graft.tools.StateProbe`",
+  )
+
+  test("every main in src/main is a listed entry point that a document runs") {
+    val runners = docs("README.md", "ROADMAP.md", ".claude/skills/verify/SKILL.md")
+    val mains = for {
+      f <- scalaFiles("src/main")
+      ls = codeLines(f)
+      (l, i) <- ls.zipWithIndex
+      m <- defLine.findPrefixMatchOf(l).toSeq if m.group(3) == "main"
+      owner <- ls.take(i).reverseIterator.flatMap(ownerLine.findPrefixMatchOf(_))
+        .find(_.group(1).length < m.group(1).length).map(_.group(3))
+    } yield s"$owner.main" -> s"${f.getPath}:${i + 1}"
+    val listed = mains.map(_._1).toSet
+    val problems =
+      mains.collect { case (key, at) if !entryPoints.contains(key) =>
+        s"$at $key is not on the entryPoints list" } ++
+      entryPoints.toSeq.sortBy(_._1).flatMap { case (key, phrase) =>
+        Seq(
+          Option.when(!listed(key))(s"$key is listed but has no def main in src/main"),
+          Option.when(!runners.exists(_.contains(squash(phrase))))(
+            s"$key: '$phrase' is in none of README.md, ROADMAP.md, the verify skill"))
+          .flatten
+      }
+    assert(problems.isEmpty, problems.mkString("\n"))
+  }
 
   test("store manifests are written only by the commit step in ops/Manifest") {
     // One commit protocol for the four manifest stores: a manifest write
@@ -295,25 +373,21 @@ class SourceLintSpec extends AnyFunSuite {
 
   test("every public def in src/main has a caller or is on the engine surface list") {
     val offenders = uncalledPublicDefs().collect {
-      case (f, n, key) if !engineSurface.contains(key) =>
+      case (f, n, key) if !engineSurface.contains(key) && !entryPoints.contains(key) =>
         s"${f.getPath}:$n $key has no caller in src/main or perfbench/src"
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("every engine surface entry is uncalled, documented and exercised by its spec") {
-    def squash(t: String) = t.replaceAll("\\s+", " ")
-    val docs = Seq("README.md", "SURVEY.md").map { p =>
-      val src = scala.io.Source.fromFile(p, "UTF-8")
-      try squash(src.mkString) finally src.close()
-    }
+    val capabilities = docs("README.md", "SURVEY.md")
     val uncalled = uncalledPublicDefs().map(_._3).toSet
     val problems = engineSurface.toSeq.sortBy(_._1).flatMap { case (key, (capability, spec)) =>
       val name = key.substring(key.indexOf('.') + 1)
       val specFile = new File(s"src/test/scala/graft/$spec.scala")
       Seq(
         Option.when(!uncalled(key))(s"$key is not an uncalled public def in src/main"),
-        Option.when(!docs.exists(_.contains(squash(capability))))(
+        Option.when(!capabilities.exists(_.contains(squash(capability))))(
           s"$key: '$capability' is in neither README.md nor SURVEY.md"),
         Option.when(!specFile.isFile ||
             !codeLines(specFile).exists(l => identifier.findAllIn(l).contains(name)))(
